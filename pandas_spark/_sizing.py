@@ -23,15 +23,6 @@ leaf statistics.
 
 from __future__ import annotations
 
-import os
-
-
-def _env_int(name: str, default: int) -> int:
-    try:
-        return int(os.environ.get(name, str(default)))
-    except ValueError:
-        return default
-
 
 def plan_input_bytes(sdf) -> int | None:
     """Sum of the analyzed plan's leaf-relation size estimates.

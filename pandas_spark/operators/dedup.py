@@ -288,7 +288,7 @@ def _shingle_sig_udf(num_hashes: int, shingle_n: int):
     through interpreted HOFs (``transform``/``slice``/``array_join``
     are CodegenFallback): measured 0.43 s of the 1.33 s query at sf0.1,
     entirely the per-shingle string allocation (the xxhash64 and
-    array_distinct on top were free — tools/probe_shingle_cost.py).
+    array_distinct on top were free — OPTIMIZATION_r12.md).
     Here the kernel receives the NORMALIZED text (regex stays JVM-side,
     codegen, measured free) and, because tokens are space-joined,
     every word n-gram is a contiguous byte slice of it: token offsets
@@ -596,6 +596,11 @@ def jaccard_verify(
     return j
 
 
+# corpus rows per partition of the fused collapse+spread exchange in
+# _collapsed_rep_pairs (swept at local[32]; see the comment there)
+_PY_PART_ROWS = 320
+
+
 def _collapsed_rep_pairs(
     frame: DataFrame,
     text_col: str,
@@ -671,12 +676,10 @@ def _collapsed_rep_pairs(
         _target = sdf.sparkSession.sparkContext.defaultParallelism
         _nf = len(sdf.inputFiles())
         if 0 < _nf < _target:
-            from pandas_spark._sizing import _env_int, rows_sized_parts
+            from pandas_spark._sizing import rows_sized_parts
 
             parts = rows_sized_parts(
-                getattr(frame, "_rows_max", None),
-                _env_int("SPARK_GRAFT_PY_PART_ROWS", 320),
-                _target,
+                getattr(frame, "_rows_max", None), _PY_PART_ROWS, _target
             )
             pre = sdf.repartition(parts or _target, F.md5(F.col(text_col)))
     except Exception:
@@ -692,49 +695,27 @@ def _collapsed_rep_pairs(
     # (r12; guide §4.2): the JVM form — array_distinct(transform(
     # shingles_expr, xxhash64)) then the signature UDF — paid ~0.43 s
     # of interpreted per-shingle STRING construction per run
-    # (tools/probe_shingle_cost.py; transform/slice/array_join are
+    # (OPTIMIZATION_r12.md; transform/slice/array_join are
     # CodegenFallback). The kernel consumes the codegen'd NORMALIZED
     # text and emits bit-identical shingle sets and signatures (see
-    # _shingle_sig_udf). SPARK_GRAFT_SHINGLE_KERNEL=0 restores the
-    # JVM chain (differential-tested equal).
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_SHINGLE_KERNEL", "1") == "0":
-        with_sh = collapsed.withColumn(
-            "__s__",
-            memo_column(
-                ("hashed_shingles", text_col, shingle_n),
-                lambda: F.array_distinct(
-                    F.transform(
-                        shingles_expr(F.col(text_col), shingle_n),
-                        lambda sh: F.xxhash64(sh),
-                    )
-                ),
+    # _shingle_sig_udf; differential-tested against the JVM chain).
+    packed = collapsed.withColumn(
+        "__p__",
+        memo_column(
+            ("shingle_sig_pack", text_col, num_hashes, shingle_n),
+            lambda: _shingle_sig_udf(num_hashes, shingle_n)(
+                normalize_expr(F.col(text_col))
             ),
+        ),
+    )
+    groups = _cache_once(
+        packed.select(
+            "__rep__",
+            "__members__",
+            F.col("__p__")["minhash"].alias("minhash"),
+            F.col("__p__")["s"].alias("__s__"),
         )
-        groups = _cache_once(
-            minhash_signature(
-                with_sh, text_col, num_hashes, shingle_n, shingles_col="__s__"
-            ).select("__rep__", "__members__", "minhash", "__s__")
-        )
-    else:
-        packed = collapsed.withColumn(
-            "__p__",
-            memo_column(
-                ("shingle_sig_pack", text_col, num_hashes, shingle_n),
-                lambda: _shingle_sig_udf(num_hashes, shingle_n)(
-                    normalize_expr(F.col(text_col))
-                ),
-            ),
-        )
-        groups = _cache_once(
-            packed.select(
-                "__rep__",
-                "__members__",
-                F.col("__p__")["minhash"].alias("minhash"),
-                F.col("__p__")["s"].alias("__s__"),
-            )
-        )
+    )
     base = groups.select(F.col("__rep__").alias(id_col), "minhash", "__s__")
     cands = lsh_candidate_pairs(base, id_col, "minhash", bands, rows)
     rep_pairs = jaccard_verify(

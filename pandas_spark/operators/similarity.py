@@ -3,8 +3,9 @@
 Brute-force cosine top-k as the exactness baseline, and an LSH
 (random-hyperplane) bucketed variant as the scale path — at 100 TB the
 bucketed join touches ~1/2^bits of the corpus per query instead of all
-of it. Dot products run as ``F.aggregate``/``F.zip_with`` higher-order
-functions — JVM-side, no Python per row.
+of it. Exact top-k, pair verification and PQ score in Arrow-batched
+numpy kernels; IVF candidate scoring stays a JVM-side
+``F.aggregate``/``F.zip_with`` fold.
 """
 
 from __future__ import annotations
@@ -41,10 +42,6 @@ def norm_expr(a: Column) -> Column:
             lambda acc, v: acc + v.cast("double") * v.cast("double"),
         )
     )
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
 def pair_cosine_col(a: Column, b: Column) -> Column:
@@ -84,61 +81,10 @@ def pair_cosine_col(a: Column, b: Column) -> Column:
     return _pc(a, b)
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    method: str = "matmul",
-) -> DataFrame:
-    """Exact top-k neighbors per query (brute force).
-
-    ``method='matmul'`` (default): queries are collected to the driver
-    (bounded — queries are the small side by contract, same bound as a
-    broadcast) and ride into an Arrow-batched ``mapInPandas`` kernel as
-    a ``(dim × q)`` matrix; each corpus partition scores itself with
-    one numpy matmul per batch and emits only its PARTIAL top-k per
-    query. The shuffle input is ``partitions × q × k`` narrow rows —
-    not the ``n × q`` scored cross product — so the final per-query
-    window is O(1) regardless of corpus size. Zero-norm / NULL corpus
-    vectors are excluded (their cosine is undefined; the HOF path let
-    NaN sort first, which was never useful).
-
-    ``method='hof'``: the original pure-Catalyst formulation (broadcast
-    cross join + ``F.aggregate`` dot folds + full window), kept for
-    Arrow-less environments.
-
-    Tie-break on corpus id for determinism in both paths.
-    """
-    if method == "matmul":
-        return _cosine_topk_matmul(corpus, queries, k, id_col, vec_col, query_id_col)
-    # norms are computed once per side, not per (corpus, query) pair —
-    # at q queries that's (q+1)× fewer norm folds over the corpus
-    q = queries.spark.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qv__"),
-        norm_expr(F.col(vec_col)).alias("__qn__"),
-    )
-    c = corpus.spark.select(
-        F.col(id_col),
-        F.col(vec_col).alias("__cv__"),
-        norm_expr(F.col(vec_col)).alias("__cn__"),
-    )
-    scored = c.crossJoin(F.broadcast(q)).withColumn(
-        "cosine",
-        dot_expr(F.col("__cv__"), F.col("__qv__")) / (F.col("__cn__") * F.col("__qn__")),
-    )
-    w = W.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    out = (
-        scored.withColumn("__rn__", F.row_number().over(w))
-        .filter(F.col("__rn__") <= k)
-        .select(query_id_col, id_col, "cosine", F.col("__rn__").alias("rank"))
-    )
-    return DataFrame(out)
+# rows / leaf bytes of one Arrow batch: the per-partition target of
+# _arrow_stage_coalesce (the buffer pool chunks by the same row count)
+_ARROW_PART_ROWS = 65536
+_ARROW_PART_BYTES = 32 << 20
 
 
 def _arrow_stage_coalesce(sdf, rows_max=None):
@@ -157,7 +103,6 @@ def _arrow_stage_coalesce(sdf, rows_max=None):
     production-scale scan (leaf bytes >> cap) is never touched, so no
     large input can ever be squeezed onto few cores by this path."""
     from pandas_spark._sizing import (
-        _env_int,
         bytes_sized_parts,
         plan_input_bytes,
         rows_sized_parts,
@@ -167,15 +112,9 @@ def _arrow_stage_coalesce(sdf, rows_max=None):
         ceiling = sdf.sparkSession.sparkContext.defaultParallelism
     except Exception:  # Spark Connect: no sparkContext — keep layout
         return sdf
-    parts = rows_sized_parts(
-        rows_max, _env_int("SPARK_GRAFT_ARROW_PART_ROWS", 65536), ceiling
-    )
+    parts = rows_sized_parts(rows_max, _ARROW_PART_ROWS, ceiling)
     if parts is None:
-        parts = bytes_sized_parts(
-            plan_input_bytes(sdf),
-            _env_int("SPARK_GRAFT_ARROW_PART_BYTES", 32 << 20),
-            ceiling,
-        )
+        parts = bytes_sized_parts(plan_input_bytes(sdf), _ARROW_PART_BYTES, ceiling)
     if parts is not None and parts < ceiling:
         return sdf.coalesce(parts)
     return sdf
@@ -208,14 +147,26 @@ def _vec_matrix(va):
     return np.stack([np.asarray(v, dtype=np.float64) for v in va.to_pylist()])
 
 
-def _cosine_topk_matmul(
+def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
 ) -> DataFrame:
+    """Exact top-k neighbors per query (brute force).
+
+    Queries are collected to the driver (bounded — queries are the
+    small side by contract, same bound as a broadcast) and ride into an
+    Arrow-batched ``mapInArrow`` kernel as a ``(dim × q)`` matrix; each
+    corpus partition scores itself with one numpy matmul per batch and
+    emits only its PARTIAL top-k per query. The shuffle input is
+    ``partitions × q × k`` narrow rows — not the ``n × q`` scored cross
+    product — so the final per-query window is O(1) regardless of
+    corpus size. Zero-norm / NULL corpus vectors are excluded (their
+    cosine is undefined). Ties break on corpus id for determinism.
+    """
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     spark = corpus.spark.sparkSession
@@ -305,48 +256,6 @@ def _cosine_topk_matmul(
 def _hyperplanes(dim: int, bits: int, seed: int) -> list[list[float]]:
     rng = random.Random(seed)
     return [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(bits)]
-
-
-def lsh_bucket_expr(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane signature: bit i = sign(v · plane_i)."""
-    bits = []
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        bits.append((dot_expr(vec, plane) > 0).cast("long") * F.lit(1 << i))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
-def lsh_band_expr(vec: Column, planes: list[list[float]], bands: int, rows: int) -> Column:
-    """Banded random-hyperplane signature → array<struct<band,bucket>>.
-
-    Band b's bucket is the ``rows``-bit integer of signs of planes
-    [b*rows, (b+1)*rows). Two vectors at angle θ share a band w.p.
-    p^rows (p = 1-θ/π), and some band w.p. 1-(1-p^rows)^bands — the
-    standard amplification; (24,3) gives >0.999 recall at cosine 0.4.
-
-    Pure-Catalyst formulation, kept for Arrow-less environments; the
-    hot path uses the vectorized ``_banded`` below — bands·rows
-    separate interpreted dot-aggregates build a huge expression tree
-    (analysis cost alone is seconds) and HOF lambdas are evaluated
-    per element, not codegen'd.
-    """
-    def bucket(b: int) -> Column:
-        out = None
-        for r in range(rows):
-            plane = F.array(*[F.lit(float(x)) for x in planes[b * rows + r]])
-            bit = (dot_expr(vec, plane) > 0).cast("int") * F.lit(1 << r)
-            out = bit if out is None else out + bit
-        return out
-
-    return F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), bucket(b).alias("bucket"))
-            for b in range(bands)
-        ]
-    )
 
 
 def _banded(sdf: SparkDF, id_col: str, vec_col: str, planes, bands: int, rows: int) -> SparkDF:
@@ -525,34 +434,6 @@ def _cells_expr(C: np.ndarray, nprobe: int, v: Column) -> Column:
     )
 
 
-def _cells_udf(C: np.ndarray, nprobe: int):
-    """Arrow-batched assignment: one (batch × dim) @ (dim × k) matmul
-    per batch, top-``nprobe`` cells by dot product (cells are unit-norm
-    so dot order == cosine order). Centroids ride inside the UDF
-    closure — k·dim doubles, broadcast once per executor."""
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    CT = C.T.copy()  # (dim, k)
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def _cells(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype=object)
-        # sliced like pair_cosine_col: bound each worker's numpy peak
-        # regardless of the Arrow batch size (vector columns make big
-        # batches expensive — see the 1000×-decade OOM note there)
-        parts = []
-        step = 8192
-        for lo in range(0, len(vs), step):
-            M = np.stack([np.asarray(v, dtype=np.float64) for v in vs.iloc[lo : lo + step]])
-            S = M @ CT  # (n, k)
-            top = np.argsort(-S, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
-            parts.extend(list(top))
-        return pd.Series(parts)
-
-    return _cells
-
-
 def _bounded_hash_sample(c: SparkDF, id_col: str, vec_alias: str, sample_n: int) -> list:
     """Deterministic k-means training sample whose DRIVER RECEIPT is
     O(sample_n) at any corpus size.
@@ -583,16 +464,12 @@ def _bounded_hash_sample(c: SparkDF, id_col: str, vec_alias: str, sample_n: int)
     def receive(sdf):
         """Driver receipt as a (rows, dim) float64 matrix — toArrow()
         reads the flat list buffer (no per-cell Python boxing; the
-        boxed .collect() was a measured pq_train cost at sample_n=100k),
-        with a Row-collect fallback for Arrow-less environments."""
+        boxed .collect() was a measured pq_train cost at sample_n=100k)."""
         q = sdf.orderBy(h.asc(), F.col(id_col).asc()).limit(sample_n).select(vec_alias)
-        try:
-            tbl = q.toArrow()
-            if tbl.num_rows == 0:
-                return np.empty((0, 0))
-            return _vec_matrix(tbl.column(0).combine_chunks())
-        except Exception:
-            return np.asarray([r[0] for r in q.collect()], dtype=np.float64)
+        tbl = q.toArrow()
+        if tbl.num_rows == 0:
+            return np.empty((0, 0))
+        return _vec_matrix(tbl.column(0).combine_chunks())
 
     rows = receive(filtered)
     if len(rows) < min(sample_n, n) and filtered is not c:
@@ -729,30 +606,21 @@ def _pair_cosine_broadcast(
     the IDENTICAL einsum/norm expression as ``pair_cosine_col`` on the
     same 8192-row slices — per-pair cosine depends only on that pair's
     two float64 rows, so values are bit-identical (differential test).
-    Pairs with a NULL vector on either side are dropped here, exactly
-    as their NULL cosine fails every downstream threshold filter."""
+    Only non-NULL vectors are broadcast: a pair with a NULL vector on
+    either side finds no id match and is dropped here, exactly as its
+    NULL cosine fails every downstream threshold filter."""
     import pyarrow as pa
 
-    tbl = sdf.select(F.col(id_col), F.col(vec_col)).toArrow()
+    tbl = (
+        sdf.select(F.col(id_col), F.col(vec_col))
+        .filter(F.col(vec_col).isNotNull())
+        .toArrow()
+    )
     ids_np = tbl.column(0).to_numpy(zero_copy_only=False)
-    vcol = tbl.column(1)
-    if isinstance(vcol, pa.ChunkedArray):
-        vcol = vcol.combine_chunks()
-    valid = ~np.asarray(vcol.is_null())
-    rows = [
-        np.asarray(v.as_py(), dtype=np.float64) if ok else None
-        for v, ok in zip(vcol, valid)
-    ]
-    dim = next((len(r) for r in rows if r is not None), 0)
-    V = np.zeros((len(rows), dim), dtype=np.float64)
-    for i, r in enumerate(rows):
-        if r is not None and len(r) == dim:
-            V[i] = r
-        else:
-            valid[i] = False
+    V = _vec_matrix(tbl.column(1).combine_chunks()) if tbl.num_rows else np.empty((0, 0))
     order = np.argsort(ids_np, kind="stable")
-    sids, V, valid = ids_np[order], V[order], valid[order]
-    bc = sdf.sparkSession.sparkContext.broadcast((sids, V, valid))
+    sids, V = ids_np[order], V[order]
+    bc = sdf.sparkSession.sparkContext.broadcast((sids, V))
     id_t = next(f for f in sdf.schema.fields if f.name == id_col)
     out_schema = (
         f"id1 {id_t.dataType.simpleString()}, "
@@ -760,20 +628,14 @@ def _pair_cosine_broadcast(
     )
 
     def gen(batches):
-        sids, V, valid = bc.value
+        sids, V = bc.value
         n_ids = len(sids)
         for b in batches:
             i1 = b.column(0).to_numpy(zero_copy_only=False)
             i2 = b.column(1).to_numpy(zero_copy_only=False)
             p1 = np.searchsorted(sids, i1).clip(max=max(n_ids - 1, 0))
             p2 = np.searchsorted(sids, i2).clip(max=max(n_ids - 1, 0))
-            ok = (
-                (n_ids > 0)
-                & (sids[p1] == i1)
-                & (sids[p2] == i2)
-                & valid[p1]
-                & valid[p2]
-            )
+            ok = (n_ids > 0) & (sids[p1] == i1) & (sids[p2] == i2)
             idx = np.flatnonzero(ok)
             if len(idx) == 0:
                 continue
@@ -795,6 +657,11 @@ def _pair_cosine_broadcast(
             )
 
     return cand.select("id1", "id2").mapInArrow(gen, out_schema)
+
+
+# row bound of a footer-proven corpus whose vectors the near-dup verify
+# broadcasts (_pair_cosine_broadcast) instead of joining twice
+_BCAST_VERIFY_ROWS = 65536
 
 
 def embedding_neardup_pairs(
@@ -819,7 +686,6 @@ def embedding_neardup_pairs(
     and deduped BEFORE the two vector-fetch joins, so each distinct
     pair computes cosine once; oversized buckets are capped by the
     same aggregation's size filter."""
-    from pandas_spark._sizing import _env_int
     from pandas_spark.operators.dedup import bucket_pairs
 
     planes = _hyperplanes(dim, bands * rows, seed)
@@ -843,7 +709,7 @@ def embedding_neardup_pairs(
     if (
         id_integral
         and rows_max
-        and 0 < rows_max <= _env_int("SPARK_GRAFT_BCAST_VERIFY_ROWS", 65536)
+        and 0 < rows_max <= _BCAST_VERIFY_ROWS
     ):
         scored = _pair_cosine_broadcast(cand, sdf, id_col, "__v__")
     else:
@@ -1003,160 +869,18 @@ def pq_train(
     )
 
 
-def _pq_code_expr(codebooks: np.ndarray, v: Column) -> Column:
-    """JVM-side PQ encoding: per subspace, the argmin-L2 centroid index
-    as a Catalyst fold (array<int>, length m). Codebooks ride as ONE
-    nested literal per subspace (the IVF lesson: one tree node, not
-    k·dim scalars); ties break to the smaller index (np.argmin rule),
-    encoded as min over (dist, index) structs. Map-only — encoding a
-    100 TB corpus is a scan, not a shuffle."""
-    m, ksub, dsub = codebooks.shape
-
-    def _sub_code(cb, sub):
-        def body(c):
-            return F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        sub,
-                        F.element_at(cb, c + 1),
-                        lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-                c.alias("i"),
-            )
-
-        pairs = F.transform(F.sequence(F.lit(0), F.lit(ksub - 1)), body)
-        return F.array_min(pairs)["i"].cast("int")
-
-    codes = [
-        _sub_code(
-            F.lit([[float(x) for x in row] for row in codebooks[j]]),
-            F.slice(v, j * dsub + 1, dsub),
-        )
-        for j in range(m)
-    ]
-    return F.array(*codes)
-
-
 def pq_encode(
     corpus: DataFrame,
     codebooks: np.ndarray,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     code_col: str = "pq_code",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Corpus vectors → length-m code arrays (keeps all other columns,
     drops the raw vector — the point is that downstream search carries
-    m ints, not dim floats). ``engine='arrow'`` (default) encodes with
-    the zero-copy mapInArrow kernel; ``'catalyst'`` keeps the pure-JVM
-    argmin fold (bit-identical codes, slower at corpus scale)."""
-    if engine == "arrow":
-        return DataFrame(
-            _pq_encode_arrow(corpus.spark, codebooks, vec_col, code_col)
-        )
-    out = corpus.spark.withColumn(
-        code_col, _pq_code_expr(codebooks, F.col(vec_col))
-    ).drop(vec_col)
-    return DataFrame(out)
-
-
-def pq_topk(
-    encoded: DataFrame,
-    queries: DataFrame,
-    codebooks: np.ndarray,
-    k: int = 10,
-    id_col: str = "vec_id",
-    code_col: str = "pq_code",
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-    method: str = "arrow",
-) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes.
-
-    ``method='arrow'`` (default): queries are collected to the driver
-    (bounded — the small side by contract, same receipt as a
-    broadcast), lookup tables are computed in numpy, and each corpus
-    partition scores its own codes with vectorized LUT gathers inside
-    ``mapInArrow`` — emitting only its PARTIAL top-k per query, exactly
-    the cosine-matmul shuffle shape (partitions × q × k narrow rows,
-    the corpus codes never shuffle). At the 10⁴× decade the JVM fold
-    below was the bottleneck: an interpreted `aggregate` per
-    (row, query) is ~1.6B fold steps over 20M codes × 5 queries.
-
-    ``method='catalyst'``: per-query LUTs as JVM transforms over the
-    codebook literals, broadcast-joined to the code table, two-level
-    top-k via spark_partition_id. Arrow-less fallback.
-
-    approx_dist is the standard PQ estimate of squared L2 distance.
-    Either way the searched index carries only (id, m codes); compose
-    with IVF cells for the full IVF-PQ index."""
-    if method == "arrow":
-        return _pq_topk_arrow(
-            encoded, queries, codebooks, k, id_col, code_col, query_id_col, vec_col
-        )
-    m, ksub, dsub = codebooks.shape
-    def _lut(cb, sub):
-        def body(cent):
-            return F.aggregate(
-                F.zip_with(
-                    sub,
-                    cent,
-                    lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-
-        return F.transform(cb, body)
-
-    luts = [
-        _lut(
-            F.lit([[float(x) for x in row] for row in codebooks[j]]),
-            F.slice(F.col("__qv__"), j * dsub + 1, dsub),
-        )
-        for j in range(m)
-    ]
-    q = queries.spark.select(
-        F.col(query_id_col), F.col(vec_col).alias("__qv__")
-    ).select(query_id_col, F.array(*luts).alias("__lut__"))
-    scored = (
-        encoded.spark.select(F.col(id_col), F.col(code_col).alias("__code__"))
-        .join(F.broadcast(q))
-        .select(
-            query_id_col,
-            id_col,
-            F.aggregate(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                F.lit(0.0),
-                lambda acc, j: acc
-                + F.element_at(
-                    F.element_at(F.col("__lut__"), j + 1),
-                    F.element_at(F.col("__code__"), j + 1) + 1,
-                ),
-            ).alias("approx_dist"),
-        )
-    )
-    part = scored.withColumn("__pid__", F.spark_partition_id())
-    w_local = W.partitionBy(query_id_col, "__pid__").orderBy(
-        F.col("approx_dist").asc(), F.col(id_col).asc()
-    )
-    survivors = (
-        part.withColumn("__rn__", F.row_number().over(w_local))
-        .filter(F.col("__rn__") <= k)
-        .drop("__rn__", "__pid__")
-    )
-    w = W.partitionBy(query_id_col).orderBy(
-        F.col("approx_dist").asc(), F.col(id_col).asc()
-    )
-    out = (
-        survivors.withColumn("__rn__", F.row_number().over(w))
-        .filter(F.col("__rn__") <= k)
-        .select(query_id_col, id_col, "approx_dist", F.col("__rn__").alias("rank"))
-    )
-    return DataFrame(out)
+    m ints, not dim floats). Encodes with the zero-copy ``mapInArrow``
+    kernel ``_pq_encode_arrow``."""
+    return DataFrame(_pq_encode_arrow(corpus.spark, codebooks, vec_col, code_col))
 
 
 def pq_topk_rerank(
@@ -1216,11 +940,8 @@ def _pq_encode_arrow(
     """Zero-copy PQ encoding: mapInArrow reads the vector column
     straight from the Arrow flat buffer (_vec_matrix — no per-cell
     Python lists, which dominated the pandas_udf form) and computes per
-    8k slice one (n, ksub) distance matrix per subspace. Distances are
-    the same in-order (a-b)² sums as the Catalyst fold (dsub is below
-    numpy's pairwise-summation threshold), ties break to the smaller
-    index (np.argmin == the fold's struct-min rule), so codes are
-    bit-identical (unit-tested)."""
+    8k slice one (n, ksub) distance matrix per subspace; ties break to
+    the smaller index (np.argmin)."""
     import pyarrow as pa
 
     m, ksub, dsub = codebooks.shape
@@ -1397,16 +1118,28 @@ def ivfpq_topk(
     return DataFrame(out)
 
 
-def _pq_topk_arrow(
+def pq_topk(
     encoded: DataFrame,
     queries: DataFrame,
     codebooks: np.ndarray,
-    k: int,
-    id_col: str,
-    code_col: str,
-    query_id_col: str,
-    vec_col: str,
+    k: int = 10,
+    id_col: str = "vec_id",
+    code_col: str = "pq_code",
+    query_id_col: str = "query_id",
+    vec_col: str = "embedding",
 ) -> DataFrame:
+    """Asymmetric-distance (ADC) top-k over PQ codes.
+
+    Queries are collected to the driver (bounded — the small side by
+    contract, same receipt as a broadcast), lookup tables are computed
+    in numpy, and each corpus partition scores its own codes with
+    vectorized LUT gathers inside ``mapInArrow`` — emitting only its
+    PARTIAL top-k per query, exactly the ``cosine_topk`` shuffle shape
+    (partitions × q × k narrow rows, the corpus codes never shuffle).
+
+    approx_dist is the standard PQ estimate of squared L2 distance. The
+    searched index carries only (id, m codes); compose with IVF cells
+    for the full IVF-PQ index (``ivfpq_topk``)."""
     import pyarrow as pa
 
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -1430,8 +1163,9 @@ def _pq_topk_arrow(
         Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
         nq = len(qids)
         # LUT[q, j, c] = ||Q[q]_sub_j - C[j][c]||² accumulated dim-by-dim
-        # in order — numpy's pairwise .sum() differs from the JVM
-        # zip_with fold's sequential adds in the last ulp at dsub >= 8
+        # in order — numpy's pairwise .sum() differs from sequential
+        # adds in the last ulp at dsub >= 8, and ivfpq_topk's JVM LUT
+        # fold adds sequentially
         LUT = np.zeros((nq, m, ksub))
         for j in range(m):
             S = Q[:, j * dsub : (j + 1) * dsub]
@@ -1458,7 +1192,7 @@ def _pq_topk_arrow(
                 for qi in range(nq):
                     # sequential accumulation over subspaces — numpy's
                     # pairwise .sum() kicks in at m>=8 and differs from
-                    # the JVM fold's in-order adds in the last ulp
+                    # ivfpq_topk's in-order ADC fold in the last ulp
                     scores = np.zeros(n)
                     for j in range(m):
                         scores += LUT[qi][j][codes[:, j]]

@@ -967,74 +967,6 @@ def tfidf_top_terms(
 # repetition half; the content-quality half is gopher_rules above)
 # ---------------------------------------------------------------------------
 
-def _ngrams_expr(words: Column, n: int) -> Column:
-    """All word n-grams (overlapping, WITH multiplicity) joined by a
-    single space — array<string>; empty when the doc has < n words."""
-    if n == 1:
-        return words
-    return F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def _dup_fold_expr(arr: Column) -> Column:
-    """One aggregate fold over ``array_sort(arr)`` → struct(
-    dup_units, dup_chars, top_count, top_chars): how many elements
-    (and their total characters) belong to a value occurring ≥ 2
-    times, plus the most-frequent value's count and count·length
-    (ties on count broken by larger count·length — deterministic and
-    mirrored verbatim by the SQL oracle's ``max(c*l) WHERE c = max_c``).
-
-    Array-local: zero shuffle, runs inside the scan stage. Elements
-    must be non-empty strings (callers filter), so the '' init
-    sentinel never collides.
-    """
-    zero = F.lit(0).cast("long")
-    init = F.struct(
-        F.lit("").alias("prev"),
-        zero.alias("run"),
-        zero.alias("du"),
-        zero.alias("dc"),
-        zero.alias("bc"),
-        zero.alias("bch"),
-    )
-
-    def step(acc, e):
-        same = e == acc["prev"]
-        run = F.when(same, acc["run"] + 1).otherwise(F.lit(1).cast("long"))
-        le = F.length(e).cast("long")
-        # run hits 2 → the FIRST occurrence retroactively counts too
-        du = acc["du"] + F.when(same & (run == 2), 2).when(same, 1).otherwise(0).cast("long")
-        dc = acc["dc"] + (F.when(same & (run == 2), 2 * le).when(same, le).otherwise(zero))
-        cch = run * le
-        # top tracking counts REPEATED values only (run >= 2): a
-        # singleton "most frequent n-gram" is every short doc's longest
-        # n-gram, which would fail the threshold vacuously — the public
-        # DataTrove GopherRepetitionFilter applies the same count>1 gate
-        bc = F.when(run >= 2, F.greatest(acc["bc"], run)).otherwise(acc["bc"])
-        bch = (
-            F.when((run >= 2) & (run > acc["bc"]), cch)
-            .when((run >= 2) & (run == acc["bc"]) & (cch > acc["bch"]), cch)
-            .otherwise(acc["bch"])
-        )
-        return F.struct(
-            e.alias("prev"), run.alias("run"), du.alias("du"),
-            dc.alias("dc"), bc.alias("bc"), bch.alias("bch"),
-        )
-
-    acc = F.aggregate(F.array_sort(arr), init, step)
-    return F.struct(
-        acc["du"].alias("dup_units"),
-        acc["dc"].alias("dup_chars"),
-        acc["bc"].alias("top_count"),
-        acc["bch"].alias("top_chars"),
-    )
-
-
 # Gopher Table A1 thresholds (public values)
 GOPHER_REP_THRESHOLDS = {
     "dup_line_frac": 0.30,
@@ -1055,15 +987,16 @@ def _rep_col_names(top_ns, dup_ns) -> list[str]:
 
 
 # Java \s == [ \t\n\x0B\f\r]; Python re.ASCII \s is the identical set
-# (\x0B is \v) — the Arrow kernel must split exactly like F.split
+# (\x0B is \v) — words split exactly like Spark's split(text, '\s+')
 _WS_RE = None
 _PARA_RE = None
 
 
 def _rep_stats_py(text: str, top_ns, dup_ns) -> dict:
-    """Pure-Python twin of the Catalyst fold: IDENTICAL integer counts
-    and the same float divisions, so both engines (and the SQL oracle)
-    agree bit-for-bit."""
+    """Per-document reference for ``_rep_stats_batch`` (and its
+    fallback for 1-gram families): IDENTICAL integer counts and the
+    same float divisions, so the kernel, this reference and the SQL
+    oracle agree bit-for-bit."""
     import re
     from collections import Counter
 
@@ -1207,7 +1140,6 @@ def repetition_signals(
     top_ns: Sequence[int] = (2, 3, 4),
     dup_ns: Sequence[int] = (5, 6, 7, 8, 9, 10),
     thresholds: dict | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Gopher repetition-quality signals (Rae et al. 2021 §A1.1 Table
     A1, the half ``gopher_rules`` doesn't cover): duplicated line /
@@ -1227,80 +1159,39 @@ def repetition_signals(
     fractions over the units' total characters, n-gram fractions over
     ``length(text)``.
 
-    ``engine='arrow'`` (default): one Arrow-batched ``mapInPandas``
-    pass hash-counting all 9 n-gram families per doc in Python — the
-    counts are integers, the divisions identical, so the result is
-    bit-equal to the Catalyst path (unit-tested). ``engine='catalyst'``
-    keeps the pure-HOF formulation: measured 10× slower at the 100×
-    decade (154 s vs 14.6 s over 500k docs — an aggregate fold with a
-    six-field struct accumulator per array element is interpreted,
-    never codegen'd), retained for Arrow-less deployments.
-
-    Scale shape either way: map-only, zero shuffles — a scan-side
-    filter at 100 TB exactly like ``gopher_rules``.
+    One Arrow-batched ``mapInPandas`` pass counts all n-gram families
+    per batch in numpy (``_rep_stats_batch``) — exact integer counts,
+    then the float divisions, bit-equal to the per-document reference
+    ``_rep_stats_py`` (unit- and fuzz-tested). Scale shape: map-only,
+    zero shuffles — a scan-side filter at 100 TB exactly like
+    ``gopher_rules``.
     """
     th = {**GOPHER_REP_THRESHOLDS, **(thresholds or {})}
-    if engine == "arrow":
-        return _repetition_signals_arrow(frame, text_col, tuple(top_ns), tuple(dup_ns), th)
-    # NULL text ≡ empty (both engines agree; the Arrow kernel maps None -> "")
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    tlen = F.greatest(F.length(t), F.lit(1)).cast("double")
+    top_ns, dup_ns = tuple(top_ns), tuple(dup_ns)
+    names = _rep_col_names(top_ns, dup_ns)
+    schema = ", ".join(
+        f"{qi(f.name)} {f.dataType.simpleString()}" for f in frame.spark.schema.fields
+    ) + ", " + ", ".join(f"{qi(n)} double" for n in names) + ", `repetition_keep` boolean"
 
-    def units(pattern):
-        return F.filter(
-            F.transform(F.split(t, pattern), lambda x: F.trim(x)),
-            lambda x: x != "",
-        )
+    def fn(batches):
+        import numpy as np
 
-    words = F.filter(F.split(t, r"\s+"), lambda w: w != "")
+        for pdf in batches:
+            stats = _rep_stats_batch(list(pdf[text_col]), top_ns, dup_ns)
+            keep = np.ones(len(pdf), dtype=bool)
+            for nm in ("line", "para"):
+                keep &= stats[f"dup_{nm}_frac"] <= th[f"dup_{nm}_frac"]
+                keep &= stats[f"dup_{nm}_char_frac"] <= th[f"dup_{nm}_char_frac"]
+            for n in top_ns:
+                keep &= stats[f"top_{n}gram_char_frac"] <= th["top_ngram_char_frac"][n]
+            for n in dup_ns:
+                keep &= stats[f"dup_{n}gram_char_frac"] <= th["dup_ngram_char_frac"][n]
+            for nm in names:
+                pdf[nm] = stats[nm]
+            pdf["repetition_keep"] = keep
+            yield pdf
 
-    cols = []
-    keeps = []
-    for name, pat in (("line", r"\n"), ("para", r"\n{2,}")):
-        u = units(pat)
-        s = _dup_fold_expr(u)
-        n_units = F.greatest(F.size(u), F.lit(1)).cast("double")
-        u_chars = F.greatest(
-            F.aggregate(u, F.lit(0).cast("long"), lambda a, e: a + F.length(e)),
-            F.lit(1),
-        ).cast("double")
-        uf = (s["dup_units"] / n_units).alias(f"dup_{name}_frac")
-        cf = (s["dup_chars"] / u_chars).alias(f"dup_{name}_char_frac")
-        cols += [uf, cf]
-        keeps += [
-            s["dup_units"] / n_units <= th[f"dup_{name}_frac"],
-            s["dup_chars"] / u_chars <= th[f"dup_{name}_char_frac"],
-        ]
-    for n in top_ns:
-        s = _dup_fold_expr(_ngrams_expr(words, n))
-        frac = F.least(s["top_chars"] / tlen, F.lit(1.0))
-        cols.append(frac.alias(f"top_{n}gram_char_frac"))
-        keeps.append(frac <= th["top_ngram_char_frac"][n])
-    for n in dup_ns:
-        s = _dup_fold_expr(_ngrams_expr(words, n))
-        frac = F.least(s["dup_chars"] / tlen, F.lit(1.0))
-        cols.append(frac.alias(f"dup_{n}gram_char_frac"))
-        keeps.append(frac <= th["dup_ngram_char_frac"][n])
-
-    keep = keeps[0]
-    for k in keeps[1:]:
-        keep = keep & k
-    out = frame.spark.select("*", *cols, keep.alias("repetition_keep"))
-    return DataFrame(out)
-
-
-def _rep_keep(stats: dict, top_ns, dup_ns, th) -> bool:
-    ok = (
-        stats["dup_line_frac"] <= th["dup_line_frac"]
-        and stats["dup_line_char_frac"] <= th["dup_line_char_frac"]
-        and stats["dup_para_frac"] <= th["dup_para_frac"]
-        and stats["dup_para_char_frac"] <= th["dup_para_char_frac"]
-    )
-    for n in top_ns:
-        ok = ok and stats[f"top_{n}gram_char_frac"] <= th["top_ngram_char_frac"][n]
-    for n in dup_ns:
-        ok = ok and stats[f"dup_{n}gram_char_frac"] <= th["dup_ngram_char_frac"][n]
-    return ok
+    return DataFrame(spread(frame.spark).mapInPandas(fn, schema))
 
 
 def _rep_stats_batch(texts, top_ns, dup_ns) -> dict:
@@ -1438,35 +1329,6 @@ def _rep_stats_batch(texts, top_ns, dup_ns) -> dict:
                     top_doc[od[last]] = cg[order[last]]
                     out[f"top_{n}gram_char_frac"] = np.minimum(top_doc / tlen, 1.0)
     return out
-
-
-def _repetition_signals_arrow(
-    frame: DataFrame, text_col: str, top_ns, dup_ns, th
-) -> DataFrame:
-    names = _rep_col_names(top_ns, dup_ns)
-    schema = ", ".join(
-        f"{qi(f.name)} {f.dataType.simpleString()}" for f in frame.spark.schema.fields
-    ) + ", " + ", ".join(f"{qi(n)} double" for n in names) + ", `repetition_keep` boolean"
-
-    def fn(batches):
-        import numpy as np
-
-        for pdf in batches:
-            stats = _rep_stats_batch(list(pdf[text_col]), top_ns, dup_ns)
-            keep = np.ones(len(pdf), dtype=bool)
-            for nm in ("line", "para"):
-                keep &= stats[f"dup_{nm}_frac"] <= th[f"dup_{nm}_frac"]
-                keep &= stats[f"dup_{nm}_char_frac"] <= th[f"dup_{nm}_char_frac"]
-            for n in top_ns:
-                keep &= stats[f"top_{n}gram_char_frac"] <= th["top_ngram_char_frac"][n]
-            for n in dup_ns:
-                keep &= stats[f"dup_{n}gram_char_frac"] <= th["dup_ngram_char_frac"][n]
-            for nm in names:
-                pdf[nm] = stats[nm]
-            pdf["repetition_keep"] = keep
-            yield pdf
-
-    return DataFrame(spread(frame.spark).mapInPandas(fn, schema))
 
 
 def repetition_filter(frame: DataFrame, text_col: str = "text", **kwargs) -> DataFrame:

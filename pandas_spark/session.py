@@ -146,9 +146,7 @@ def profile(name: str = "default") -> dict:
 # the adaptive defaults. A wrong guess here can only cost milliseconds
 # on a small plan — large plans can never lose AQE because the gate is
 # an upper bound proven from source statistics.
-_SMALL_PLAN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SMALL_PLAN_BYTES", str(64 * 1024 * 1024))
-)
+_SMALL_PLAN_BYTES = 64 << 20
 # small-mode shuffle partitions scale with the proven source bytes
 # (~2 MiB per partition, swept at sf0.1 and the 10x decade): a 2 MB
 # plan shuffles 4 ways (less scheduling than 32 near-empty tasks); a
@@ -168,12 +166,8 @@ _SMALL_PLAN_PART_BYTES = 2 << 20
 # The cap bounds shuffle-block growth (M x R); at 100 TB the cap is what
 # applies, and AQE still owns the final count. Small plans never see
 # this (AQE is off below _SMALL_PLAN_BYTES).
-_LARGE_INIT_PART_BYTES = int(
-    os.environ.get("SPARK_GRAFT_LARGE_INIT_PART_BYTES", str(4 << 20))
-)
-_LARGE_INIT_PART_CAP = int(
-    os.environ.get("SPARK_GRAFT_LARGE_INIT_PART_CAP", "1024")
-)
+_LARGE_INIT_PART_BYTES = 4 << 20
+_LARGE_INIT_PART_CAP = 1024
 _INIT_PARTS_KEY = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 _tune_state: dict = {}
 
@@ -204,8 +198,6 @@ def tune_for_plan(sdf) -> None:
     a few-ms perf detail, never a correctness one (AQE on/off and the
     shuffle-partition count do not change results).
     """
-    if _SMALL_PLAN_BYTES <= 0:
-        return
     try:
         spark = sdf.sparkSession
         if sdf.isStreaming:
@@ -247,7 +239,7 @@ def tune_for_plan(sdf) -> None:
                 "spark.sql.shuffle.partitions": str(parts),
                 _INIT_PARTS_KEY: base[_INIT_PARTS_KEY],
             }
-        elif total >= _SMALL_PLAN_BYTES and _LARGE_INIT_PART_BYTES > 0:
+        elif total >= _SMALL_PLAN_BYTES:
             # large mode: AQE stays on; seed its coalescer with a
             # byte-derived initial partition count so per-task sort/agg
             # state stays bounded (spill-lottery fix, header comment)

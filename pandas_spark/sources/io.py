@@ -66,6 +66,14 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
 # InMemoryRelation. clear_scan_cache() is the explicit escape hatch.
 _SCAN_CACHE: dict = {}
 
+# footer-proven tables of at most this many rows (and 1 MiB on disk)
+# become driver-local relations
+_LOCAL_REL_ROWS = 2000
+# on-disk bytes above which a table never enters the buffer pool
+_CACHE_MAX_BYTES = 64 << 20
+# rows per cached buffer-pool partition (~one Arrow batch)
+_POOL_PART_ROWS = 65536
+
 
 def clear_scan_cache() -> None:
     """Drop the parquet scan-metadata cache (all sessions, all paths),
@@ -76,12 +84,6 @@ def clear_scan_cache() -> None:
         except Exception:
             pass
     _SCAN_CACHE.clear()
-
-
-def _os_env(name: str, default: str) -> str:
-    import os
-
-    return os.environ.get(name, default)
 
 
 def _path_bytes(path: str) -> int:
@@ -300,20 +302,16 @@ def _pool_layout(sdf, rows: int | None):
     first-occurrence dedup / head / stable-sort tiebreaks are
     unchanged — asserted by the pool order-parity test.
 
-    The chunk count is data-derived (rows / SPARK_GRAFT_POOL_PART_ROWS,
-    default 64k ≈ one Arrow batch), never the local core count: at 2
+    The chunk count is data-derived (rows / ``_POOL_PART_ROWS``,
+    64k ≈ one Arrow batch), never the local core count: at 2
     cores the same chunks queue; at 32 they run wide. The one-time fill
     cost is a narrow exchange of a ≤64 MB table inside the first action
     that touches it."""
     if not rows:
         return sdf
-    try:
-        per = int(_os_env("SPARK_GRAFT_POOL_PART_ROWS", "65536"))
-    except ValueError:
-        per = 65536
-    if per <= 0 or rows <= per:
+    if rows <= _POOL_PART_ROWS:
         return sdf
-    parts = min((rows + per - 1) // per, 64)
+    parts = min((rows + _POOL_PART_ROWS - 1) // _POOL_PART_ROWS, 64)
     from pandas_spark import fshim as F
     from pandas_spark.dtypes import free_name
 
@@ -426,13 +424,7 @@ def read_parquet(
             # qualify. The schema-equality guard makes this airtight:
             # any dtype the Arrow path maps differently from the JVM
             # scan (e.g. TIMESTAMP_NTZ) falls back to the scan plan.
-            try:
-                local_rows = int(
-                    _os_env("SPARK_GRAFT_LOCAL_REL_ROWS", "2000")
-                )
-            except ValueError:
-                local_rows = 2000
-            if 0 < rows <= local_rows and 0 < _path_bytes(path) <= (1 << 20):
+            if 0 < rows <= _LOCAL_REL_ROWS and 0 < _path_bytes(path) <= (1 << 20):
                 try:
                     import pyarrow.parquet as pq
 
@@ -456,18 +448,9 @@ def read_parquet(
             # Invalidation rides the (path, mtime) signature: a rewrite
             # produces a new key and the stale entry is unpersisted
             # below.
-            try:
-                cache_max = int(
-                    _os_env(
-                        "SPARK_GRAFT_CACHE_MAX_BYTES", str(64 * 1024 * 1024)
-                    )
-                )
-            except ValueError:
-                cache_max = 64 * 1024 * 1024
             if (
                 not is_local  # a LocalRelation needs no buffer pool
-                and cache_max > 0
-                and 0 < _path_bytes(path) <= cache_max
+                and 0 < _path_bytes(path) <= _CACHE_MAX_BYTES
                 and _max_cell_bytes(path) <= 64.0
             ):
                 # narrow dimension-sized tables only: wide cells (text

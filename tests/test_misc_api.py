@@ -555,7 +555,7 @@ def test_explode_multi_column_zip(spark):
         bad.explode(["a", "b"]).to_pandas()
 
 
-def test_cosine_topk_matmul_matches_hof_with_ties(spark):
+def test_cosine_topk_matches_numpy_reference_with_ties(spark):
     import numpy as np
     import pandas as pd
 
@@ -564,7 +564,7 @@ def test_cosine_topk_matmul_matches_hof_with_ties(spark):
 
     # many exact duplicates => heavy score ties at the top-k boundary;
     # the partial top-k must keep boundary ties so the global id
-    # tie-break matches the full-window HOF path exactly
+    # tie-break matches a full brute-force sort exactly
     rng = np.random.RandomState(3)
     base = rng.randn(6, 8)
     X = np.vstack([base[i % 6] for i in range(60)])  # 10 copies of each
@@ -574,18 +574,23 @@ def test_cosine_topk_matmul_matches_hof_with_ties(spark):
     f = ps.from_pandas(spark, pdf)
     f = ps.DataFrame(f.spark.repartition(8))  # force multi-partition partials
     q = ps.DataFrame(f.spark.filter("vec_id < 3").selectExpr("vec_id AS query_id", "embedding"))
-    a = (
-        cosine_topk(f, q, k=7, method="matmul")
+    got = (
+        cosine_topk(f, q, k=7)
         .sort_values(["query_id", "rank"])
         .to_pandas()
     )
-    b = (
-        cosine_topk(f, q, k=7, method="hof")
-        .sort_values(["query_id", "rank"])
-        .to_pandas()
-    )
-    assert a.vec_id.tolist() == b.vec_id.tolist()
-    assert np.allclose(a.cosine, b.cosine, atol=1e-9)
+    # reference: numpy brute force over the collected vectors, sorted
+    # by (cosine desc, id asc); identical rows give identical cosines
+    want_ids, want_cos = [], []
+    for qid in range(3):
+        scored = sorted(
+            (-float(np.dot(x, X[qid]) / (np.linalg.norm(x) * np.linalg.norm(X[qid]))), i)
+            for i, x in enumerate(X)
+        )[:7]
+        want_ids += [i for _, i in scored]
+        want_cos += [-c for c, _ in scored]
+    assert got.vec_id.tolist() == want_ids
+    assert np.allclose(got.cosine, want_cos, atol=1e-9)
 
 
 def test_to_parquet_layout_clustered(tmp_path, spark):
@@ -916,15 +921,13 @@ def test_buffer_pool_skips_dictionary_duplicated_text(spark, tmp_path):
     psio.clear_scan_cache()
 
 
-def test_buffer_pool_parallel_layout_preserves_order(spark, tmp_path):
-    """A pooled table big enough to re-chunk (rows > POOL_PART_ROWS)
+def test_buffer_pool_parallel_layout_preserves_order(spark, tmp_path, monkeypatch):
+    """A pooled table big enough to re-chunk (rows > _POOL_PART_ROWS)
     caches as MULTIPLE partitions (stage-1 parallelism for every query
     over it) while keeping the scan order BIT-IDENTICAL: the
     monotonically_increasing_id ordering over the pooled scan must
     equal the file's row order — first-occurrence dedup / head /
     stable-sort tiebreaks all hang off that ordering."""
-    import os
-
     import pandas as pd
 
     from pandas_spark import fshim as F
@@ -936,7 +939,7 @@ def test_buffer_pool_parallel_layout_preserves_order(spark, tmp_path):
     pd.DataFrame(
         {"k": [(i * 2654435761) % n for i in range(n)], "v": range(n)}
     ).to_parquet(path)
-    os.environ["SPARK_GRAFT_POOL_PART_ROWS"] = "2048"
+    monkeypatch.setattr(psio, "_POOL_PART_ROWS", 2048)
     try:
         psio.clear_scan_cache()
         a = ps.read_parquet(spark, path).to_spark()
@@ -953,7 +956,6 @@ def test_buffer_pool_parallel_layout_preserves_order(spark, tmp_path):
         want = pd.read_parquet(path)["k"].tolist()
         assert got == want
     finally:
-        os.environ.pop("SPARK_GRAFT_POOL_PART_ROWS", None)
         psio.clear_scan_cache()
 
 
@@ -1106,13 +1108,14 @@ def test_ewm_alias_overwrites_existing_column(spark):
     assert abs(rows[1] - ((2.0 + (-1.5) / 3) / (4 / 3))) < 1e-12
 
 
-def test_repetition_engines_agree(spark):
-    """Arrow kernel vs Catalyst fold: identical integer counts, same
-    divisions — bit-equal output on the adversarial hand rows AND the
-    real sf0.001 corpus."""
+def test_repetition_signals_match_reference(spark):
+    """Arrow kernel vs the per-document reference on the adversarial
+    hand rows AND the real sf0.001 corpus."""
     from pandas_spark import read_parquet
     from pandas_spark.frame import DataFrame
     from pandas_spark.operators import text
+
+    from .references import assert_repetition_matches_reference
 
     rows = [
         (1, "hello world\nhello world\nunique line\n\nhello world"),
@@ -1127,27 +1130,44 @@ def test_repetition_engines_agree(spark):
         DataFrame(sdf),
         read_parquet(spark, "/root/testdata/sf0.001/documents.parquet"),
     ):
-        a = text.repetition_signals(frame, engine="arrow").spark.collect()
-        c = text.repetition_signals(frame, engine="catalyst").spark.collect()
-        ka = sorted([tuple(r) for r in a], key=repr)
-        kc = sorted([tuple(r) for r in c], key=repr)
-        assert ka == kc
+        assert_repetition_matches_reference(
+            text.repetition_signals(frame).spark.collect()
+        )
 
 
-def test_pq_encode_engines_bit_identical(spark):
+def _pq_emb(spark):
     from pandas_spark.frame import DataFrame
-    from pandas_spark.operators import similarity as sim
     from pyspark.sql import functions as F
 
-    emb = DataFrame(
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
+    from .conftest import SF_DIR
+
+    return DataFrame(
+        spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
         )
     )
+
+
+def test_pq_encode_matches_numpy_reference(spark):
+    """Codes equal a per-vector numpy argmin over each subspace's
+    squared distances to its codebook (ties to the smaller index)."""
+    import numpy as np
+
+    from pandas_spark.operators import similarity as sim
+
+    emb = _pq_emb(spark)
     cb = sim.pq_train(emb, m=8, ksub=8, sample_n=512, iters=4, seed=3)
-    a = {r["vec_id"]: list(r["pq_code"]) for r in sim.pq_encode(emb, cb, engine="arrow").spark.collect()}
-    c = {r["vec_id"]: list(r["pq_code"]) for r in sim.pq_encode(emb, cb, engine="catalyst").spark.collect()}
-    assert a == c
+    m, _, dsub = cb.shape
+    vecs = {r["vec_id"]: np.asarray(r["embedding"]) for r in emb.spark.collect()}
+    got = {r["vec_id"]: list(r["pq_code"]) for r in sim.pq_encode(emb, cb).spark.collect()}
+    want = {
+        i: [
+            int(np.argmin(((v[j * dsub : (j + 1) * dsub] - cb[j]) ** 2).sum(-1)))
+            for j in range(m)
+        ]
+        for i, v in vecs.items()
+    }
+    assert got == want
 
 
 def test_ewm_empty_frame(spark):
@@ -1162,32 +1182,46 @@ def test_ewm_empty_frame(spark):
     assert out.spark.columns == ["g", "v", "t", "e"]
 
 
-def test_pq_topk_arrow_matches_catalyst(spark):
-    """ADC Arrow partial-top-k vs the JVM LUT fold: identical results
-    (same in-order distance sums, same (dist, id) tie rule)."""
+def test_pq_topk_matches_numpy_reference(spark):
+    """ADC partial-top-k vs numpy lookup tables: distances summed in
+    order (dims within a subspace, then subspaces), sorted by
+    (dist, id) — identical rows, bit for bit."""
+    import numpy as np
+
     from pandas_spark.frame import DataFrame
     from pandas_spark.operators import similarity as sim
     from pyspark.sql import functions as F
 
-    emb = DataFrame(
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-        )
-    )
+    emb = _pq_emb(spark)
     qs = DataFrame(
         emb.spark.filter(F.col("vec_id") < 4).select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
     )
     cb = sim.pq_train(emb, m=8, ksub=8, sample_n=512, iters=4, seed=3)
+    m, ksub, dsub = cb.shape
     enc = sim.pq_encode(emb, cb)
-    a = sorted(
-        tuple(r) for r in sim.pq_topk(enc, qs, cb, k=7, method="arrow").spark.collect()
-    )
-    c = sorted(
-        tuple(r) for r in sim.pq_topk(enc, qs, cb, k=7, method="catalyst").spark.collect()
-    )
-    assert a == c
+    got = sorted(tuple(r) for r in sim.pq_topk(enc, qs, cb, k=7).spark.collect())
+    codes = [(r["vec_id"], list(r["pq_code"])) for r in enc.spark.collect()]
+    want = []
+    for q in qs.spark.collect():
+        qv = np.asarray(q["embedding"])
+        lut = np.zeros((m, ksub))
+        for j in range(m):
+            for t in range(dsub):
+                diff = qv[j * dsub + t] - cb[j][:, t]
+                lut[j] += diff * diff
+        scored = []
+        for i, code in codes:
+            d = 0.0
+            for j in range(m):
+                d += lut[j][code[j]]
+            scored.append((float(d), i))
+        scored.sort()
+        want += [
+            (q["query_id"], i, d, rank + 1) for rank, (d, i) in enumerate(scored[:7])
+        ]
+    assert got == sorted(want)
 
 
 def test_groupby_rolling_expanding_accessors(spark):

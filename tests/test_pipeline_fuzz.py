@@ -13,7 +13,7 @@ must hold at any shape:
 * neardup_clusters: labels equal an independent union-find's
   min-of-component (transitivity; no orphan labels)
 * repetition_signals: every fraction in [0, 1], keep is boolean,
-  arrow and catalyst engines agree bit-for-bit
+  bit-equal to the per-document reference (tests/references.py)
 * remove_repeated_ngrams: per-doc output tokens are a subsequence of
   the input tokens; a corpus with no repeated window is unchanged
 
@@ -37,6 +37,8 @@ import conftest  # noqa: E402,F401
 import pandas_spark as ps  # noqa: E402
 from pandas_spark.operators import dedup as dd  # noqa: E402
 from pandas_spark.operators import text as tx  # noqa: E402
+
+from .references import assert_repetition_matches_reference  # noqa: E402
 
 
 VOCAB = ["alpha", "beta", "gamma", "delta", "x", "ζeta", "12", "a,b."]
@@ -153,17 +155,17 @@ def test_cluster_labels_match_union_find(spark, rows):
 
 @settings(**FUZZ_SETTINGS)
 @given(rows=corpus())
-def test_repetition_signals_bounded_and_engines_agree(spark, rows):
+def test_repetition_signals_bounded_and_match_reference(spark, rows):
     f = _frame(spark, rows)
-    a = tx.repetition_signals(f, engine="arrow").to_pandas().sort_values("doc_id")
-    c = tx.repetition_signals(f, engine="catalyst").to_pandas().sort_values("doc_id")
-    frac_cols = [x for x in a.columns if "frac" in x]
+    got = tx.repetition_signals(f).spark.collect()
+    frac_cols = [x for x in got[0].asDict() if "frac" in x]
     assert frac_cols
-    for col_ in frac_cols:
-        assert ((a[col_] >= -1e-12) & (a[col_] <= 1.0 + 1e-12)).all(), col_
-        # engines bit-agree
-        assert a[col_].values.tolist() == c[col_].values.tolist(), col_
-    assert a["repetition_keep"].isin([True, False]).all()
+    for r in got:
+        for col_ in frac_cols:
+            assert -1e-12 <= r[col_] <= 1.0 + 1e-12, col_
+        assert r["repetition_keep"] in (True, False)
+    # bit-equal to the per-document reference
+    assert_repetition_matches_reference(got)
 
 
 @settings(**FUZZ_SETTINGS)

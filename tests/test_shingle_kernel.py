@@ -122,24 +122,3 @@ def test_packed_kernel_matches_jvm_chain(spark, num_hashes, shingle_n):
         assert sorted(o["__s__"]) == sorted(n["__s__"]), i
         # signatures bit-identical
         assert list(o["minhash"]) == list(n["minhash"]), i
-
-
-def test_minhash_dedup_pairs_identical_with_kernel_off(spark, monkeypatch):
-    """End-to-end: the full query's output is identical with the
-    kernel and with the JVM chain (SPARK_GRAFT_SHINGLE_KERNEL=0)."""
-    from pandas_spark import read_parquet
-
-    def run():
-        docs = read_parquet(spark, f"{SF_DIR}/documents.parquet")
-        out = dedup.minhash_dedup_pairs(docs, "text", "doc_id", threshold=0.8)
-        return sorted(
-            (r["id1"], r["id2"], round(r["jaccard"], 12))
-            for r in out.to_spark().collect()
-        )
-
-    monkeypatch.setenv("SPARK_GRAFT_SHINGLE_KERNEL", "0")
-    old = run()
-    monkeypatch.setenv("SPARK_GRAFT_SHINGLE_KERNEL", "1")
-    new = run()
-    assert old == new
-    assert len(new) > 0

@@ -57,7 +57,7 @@ def test_plan_input_bytes_reads_leaf_stats(spark):
 
 def test_dedup_spread_is_data_sized_not_core_count(spark, tmp_path, monkeypatch):
     """The fused collapse+spread exchange's partition count must come
-    from the corpus row count (rows / SPARK_GRAFT_PY_PART_ROWS), not
+    from the corpus row count (rows / dedup._PY_PART_ROWS), not
     defaultParallelism. Uses a generated corpus above the LocalRelation
     cap (a local-relation input has no files, so the gate is moot) and
     a per-rows knob that lands BELOW the core ceiling, so a regression
@@ -82,7 +82,7 @@ def test_dedup_spread_is_data_sized_not_core_count(spark, tmp_path, monkeypatch)
         ),
         p,
     )
-    monkeypatch.setenv("SPARK_GRAFT_PY_PART_ROWS", "1024")
+    monkeypatch.setattr(dedup, "_PY_PART_ROWS", 1024)
     docs = ps.read_parquet(spark, p)
     assert docs._rows_max == n
     target = spark.sparkContext.defaultParallelism
@@ -120,13 +120,15 @@ def test_cosine_topk_tiny_corpus_single_arrow_partition(spark):
 
 
 def test_local_relation_row_cap_boundary(spark, tmp_path):
-    """The SPARK_GRAFT_LOCAL_REL_ROWS=2000 cliff, pinned on both sides:
+    """The _LOCAL_REL_ROWS=2000 cliff, pinned on both sides:
     <=cap -> driver-local relation (LocalTableScan, no file scan);
     cap+1 -> a real scan plan (pool or parquet). Results identical."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    cap = int(os.environ.get("SPARK_GRAFT_LOCAL_REL_ROWS", "2000"))
+    from pandas_spark.sources import io as psio
+
+    cap = psio._LOCAL_REL_ROWS
     paths = {}
     for n in (cap - 1, cap, cap + 1):
         p = str(tmp_path / f"t{n}.parquet")
