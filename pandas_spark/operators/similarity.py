@@ -108,10 +108,7 @@ def _arrow_stage_coalesce(sdf, rows_max=None):
         rows_sized_parts,
     )
 
-    try:
-        ceiling = sdf.sparkSession.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: no sparkContext — keep layout
-        return sdf
+    ceiling = sdf.sparkSession.sparkContext.defaultParallelism
     parts = rows_sized_parts(rows_max, _ARROW_PART_ROWS, ceiling)
     if parts is None:
         parts = bytes_sized_parts(plan_input_bytes(sdf), _ARROW_PART_BYTES, ceiling)

@@ -43,11 +43,8 @@ def spread(sdf, min_parallelism: int | None = None):
     files / splits) this is a no-op.
     """
     spark = sdf.sparkSession
-    try:
-        target = min_parallelism or spark.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect has no sparkContext
-        target = min_parallelism or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # inputFiles() is metadata-only (no RDD materialization, Connect-safe):
+    target = min_parallelism or spark.sparkContext.defaultParallelism
+    # inputFiles() is metadata-only (no RDD materialization):
     # few source files ⇒ few scan partitions ⇒ spread; many files ⇒ no-op
     try:
         n_files = len(sdf.inputFiles())

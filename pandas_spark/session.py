@@ -14,6 +14,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+from pandas_spark import _jvmstart
+
+_JAVA_OPTS = "spark.driver.defaultJavaOptions"
+
 _DEFAULTS = {
     # AQE: runtime stats beat static planning — coalesce tiny shuffle
     # partitions, convert to broadcast when a side turns out small,
@@ -57,7 +61,8 @@ def get_spark(app_name: str = "pandas_spark", **extra: str) -> SparkSession:
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``);
     shuffle partitions default to the local core count so tiny local
     runs don't pay 200-way shuffles, while cluster deployments pass
-    their own value via ``extra``.
+    their own value via ``extra``. The first launch of the driver JVM
+    trains a class-data archive that later launches map (``_jvmstart``).
     """
     if os.environ.get("SPARK_GRAFT_PROFILE"):
         profile(os.environ["SPARK_GRAFT_PROFILE"])
@@ -70,19 +75,26 @@ def get_spark(app_name: str = "pandas_spark", **extra: str) -> SparkSession:
     shuffle = os.environ.get(
         "SPARK_GRAFT_SHUFFLE_PARTITIONS", str(_shuffle_partitions(cpus))
     )
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", shuffle)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config(
-            "spark.driver.maxResultSize",
-            os.environ.get("SPARK_GRAFT_MAX_RESULT", "1g"),
-        )
-    )
-    for k, v in {**_DEFAULTS, **extra}.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    conf = {
+        "spark.sql.shuffle.partitions": shuffle,
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.driver.maxResultSize": os.environ.get("SPARK_GRAFT_MAX_RESULT", "1g"),
+        **_DEFAULTS,
+        **extra,
+    }
+
+    def build(java_opts):
+        builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
+        for k, v in conf.items():
+            builder = builder.config(k, v)
+        if java_opts:
+            # defaultJavaOptions, because --driver-java-options in
+            # PYSPARK_SUBMIT_ARGS replaces extraJavaOptions
+            own = conf.get(_JAVA_OPTS)
+            builder = builder.config(_JAVA_OPTS, f"{own} {java_opts}" if own else java_opts)
+        return builder.getOrCreate()
+
+    spark = _jvmstart.launch(build, conf["spark.driver.memory"])
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
@@ -283,7 +295,9 @@ def tune_for_plan(sdf) -> None:
 
 def _shuffle_partitions(cpus: str) -> int:
     if cpus == "*":
-        return max(os.cpu_count() or 8, 8)
+        # local[*] sizes from the JVM's available processors, which
+        # follow CPU affinity, not from the machine's core count
+        return max(len(os.sched_getaffinity(0)), 8)
     try:
         return max(int(cpus), 8)
     except ValueError:

@@ -19,6 +19,7 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 # suite passed locally and died on a clean machine. Tests always run
 # the DEFAULT session config.
 _SCRUBBED_ENV = ("SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_SHUFFLE_PARTITIONS")
+_BANNER: list[str] = []
 
 
 @pytest.fixture(scope="session")
@@ -28,13 +29,21 @@ def spark():
             print(f"[conftest] scrubbing {var}={os.environ.pop(var)!r} "
                   "(tests run the default session config)")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-    from pandas_spark import get_spark
+    from pandas_spark import _jvmstart, get_spark
 
     s = get_spark("tests")
-    print(f"[conftest] effective driver.memory="
-          f"{s.conf.get('spark.driver.memory', '(default)')} "
-          f"shuffle.partitions={s.conf.get('spark.sql.shuffle.partitions')}")
+    _BANNER.append(f"[conftest] effective driver.memory="
+                   f"{s.conf.get('spark.driver.memory', '(default)')} "
+                   f"shuffle.partitions={s.conf.get('spark.sql.shuffle.partitions')} "
+                   f"jvm_start={_jvmstart.state()}")
+    print(_BANNER[-1])
     return s
+
+
+def pytest_terminal_summary(terminalreporter):
+    # fixture output is captured, so repeat the banner where -q logs show it
+    for line in _BANNER:
+        terminalreporter.write_line(line)
 
 
 @pytest.fixture(scope="session")

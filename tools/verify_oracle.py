@@ -85,11 +85,12 @@ def values_match(a, b, rel_tol=1e-6):
 
 def main():
     import __spark_entry__ as entry_mod
-    from pandas_spark import get_spark
+    from pandas_spark import _jvmstart, get_spark
 
     args = sys.argv[1:]
     ansi = "--ansi" in args
     spark = get_spark("verify")
+    print(f"[verify_oracle] sf_dir={SF_DIR} jvm_start={_jvmstart.state()}")
     if ansi:
         # Driver parity: the grading session runs Spark 4 defaults —
         # ANSI on AND parquet timestamps inferred as TIMESTAMP_NTZ
