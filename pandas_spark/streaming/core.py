@@ -381,13 +381,72 @@ def ewm_mean_stream(
     )
 
 
+# The latest-right asof regime groups by a hash bucket of its keys, not
+# by key: ONE applyInPandasWithState call per bucket per micro-batch.
+# Most of a per-key call's cost was PySpark's per-group framework work
+# (Arrow → pandas, state (de)serialisation, output conversion), not the
+# asof itself, so fewer, larger groups are what pays.
+# Sweep on perfbench stream_replay (4 cores, ~1,500 keys, 3 batches,
+# --trace 1, seeds 1 and 2), op.merge_asof_stream.p50_s: per key
+# 2.86/3.42 s, 16 buckets 1.50/1.58 s, 64 buckets 1.57/1.60 s, 256
+# buckets 1.92/1.81 s. 64 is as fast as 16 and leaves the stateful
+# stage 64 tasks of parallelism on a cluster; more buckets drift back
+# toward the per-key cost. Each touched bucket's state is rewritten
+# whole: ~(touched buckets × keys/_ASOF_BUCKETS × row bytes) per batch.
+_ASOF_BUCKETS = 64
+
+
+def _asof_bucket(by: Sequence[str]) -> Column:
+    """The state bucket of a row: ``pmod(xxhash64(by…), _ASOF_BUCKETS)``."""
+    return F.pmod(F.xxhash64(*[F.col(qi(k)) for k in by]), F.lit(_ASOF_BUCKETS))
+
+
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
+
+
+def _state_cast(t: str):
+    """Python value → the value an ``array<t>`` state field stores.
+
+    pandas widens NULL-padded integer columns to float64 (the asof
+    union pads each side's missing columns with typed NULLs), so a
+    bigint arrives as 504.0 — which an integral state field NULLs on
+    write. Cast back to the state type; unwrap numpy scalars."""
+    if t in _INTEGRAL:
+        return int
+    if t in ("float", "double"):
+        return float
+    return lambda v: v.item() if hasattr(v, "item") else v
+
+
+def _asof_union(left, right, on, by, suffixes):
+    """Both asof regimes' input: left and right tagged by ``__side__``
+    (right 0, left 1), each padded with typed NULLs for the other
+    side's columns, and unioned. Returns (union, right payload cols,
+    left non-key cols, left types, right types)."""
+    overlap = (set(left.columns) & set(right.columns)) - {on} - set(by)
+    l = left.withColumnsRenamed({c: c + suffixes[0] for c in overlap})
+    r = right.withColumnsRenamed({c: c + suffixes[1] for c in overlap})
+    payload = [c for c in r.columns if c != on and c not in by]
+    l_cols = [c for c in l.columns if c != on and c not in by]
+    r_types = dict(r.dtypes)
+    l_types = dict(l.dtypes)
+    l_tag = l.selectExpr(
+        "*", "1 AS `__side__`",
+        *[f"CAST(NULL AS {r_types[c]}) AS {qi(c)}" for c in payload],
+    )
+    r_tag = r.selectExpr(
+        "*", "0 AS `__side__`",
+        *[f"CAST(NULL AS {l_types[c]}) AS {qi(c)}" for c in l_cols],
+    )
+    return l_tag.unionByName(r_tag), payload, l_cols, l_types, r_types
+
+
 def merge_asof_stream(
     left: SparkDF,
     right: SparkDF,
     on: str,
     by: Sequence[str],
     tolerance: str | None = None,
-    timeout: str = "NoTimeout",
     suffixes: tuple[str, str] = ("_l", "_r"),
     direction: str = "backward",
     lateness: str | None = None,
@@ -400,11 +459,17 @@ def merge_asof_stream(
     now OPT-OUT, not silent):
 
     * ``lateness=None`` and ``direction='backward'`` — the fast path:
-      ONE right row of state per key (the latest seen); per-key
+      the state keeps the latest right row seen per key; per-key
       arrival must be batch-ordered (the ``ewm_mean_stream``
       contract — log-ordered sources). A late right row would
       silently corrupt later matches, which is why the buffered
-      regime below exists.
+      regime below exists. Keys are grouped into ``_ASOF_BUCKETS``
+      hash buckets (``pmod(xxhash64(by…), _ASOF_BUCKETS)``): one
+      stateful call per bucket per micro-batch, one state row per
+      bucket holding each of its keys' latest right row as parallel
+      arrays. Each touched bucket's state is rewritten whole, so a
+      sparse trickle over a huge key space writes more state per
+      batch than per-key state would (SCALE.md).
     * ``lateness='10 minutes'`` — watermark-buffered, ANY direction:
       per key the state holds every row still inside the lateness
       horizon (event-time watermark = max stamp seen − lateness,
@@ -430,10 +495,6 @@ def merge_asof_stream(
     ``tolerance`` nulls matches farther than the offset. Positional
     tie rule matches pandas: among equal right stamps backward takes
     the LAST arrival, forward the FIRST."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     by = list(by)
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"direction must be backward|forward|nearest, got {direction!r}")
@@ -442,120 +503,150 @@ def merge_asof_stream(
             "forward/nearest need the buffered regime — pass lateness= "
             "(use '0 seconds' for a source that is globally ordered)"
         )
-    # boundary shield (r9, dtypes.collision_renames): both regimes tag
-    # rows with `__side__` — a user column of that name must survive
+    # boundary shield (r9, dtypes.collision_renames): the regimes tag
+    # rows with `__side__`/`__bucket__` and name state `__ts__` — a user
+    # column of those names must survive
     from pandas_spark.dtypes import collision_renames
 
     _shield = collision_renames(
-        set(left.columns) | set(right.columns), {"__side__", "__ts__"}
+        set(left.columns) | set(right.columns),
+        {"__side__", "__ts__", "__bucket__"},
     )
     if _shield:
         left = left.withColumnsRenamed(_shield)
         right = right.withColumnsRenamed(_shield)
         on = _shield.get(on, on)
         by = [_shield.get(k, k) for k in by]
-    _unmap = {v: k for k, v in _shield.items()}
     if lateness is not None:
         out = _merge_asof_stream_buffered(
-            left, right, on, by, direction, tolerance, lateness,
-            timeout, suffixes,
+            left, right, on, by, direction, tolerance, lateness, suffixes,
         )
-        return out.withColumnsRenamed(_unmap) if _unmap else out
-    if _unmap:
-        inner = merge_asof_stream(
-            left, right, on, by, tolerance, timeout, suffixes,
-        )
-        return inner.withColumnsRenamed(_unmap)
-    overlap = (set(left.columns) & set(right.columns)) - {on} - set(by)
-    l = left.withColumnsRenamed({c: c + suffixes[0] for c in overlap})
-    r = right.withColumnsRenamed({c: c + suffixes[1] for c in overlap})
-    payload = [c for c in r.columns if c != on and c not in by]
-    l_cols = [c for c in l.columns if c != on and c not in by]
-    r_types = dict(r.dtypes)
-    l_types = dict(l.dtypes)
-    l_tag = l.selectExpr(
-        "*", "1 AS `__side__`",
-        *[f"CAST(NULL AS {r_types[c]}) AS {qi(c)}" for c in payload],
-    )
-    r_tag = r.selectExpr(
-        "*", "0 AS `__side__`",
-        *[f"CAST(NULL AS {l_types[c]}) AS {qi(c)}" for c in l_cols],
-    )
-    u = l_tag.unionByName(r_tag)
+    else:
+        out = _merge_asof_stream_latest(left, right, on, by, tolerance, suffixes)
+    return out.withColumnsRenamed({v: k for k, v in _shield.items()}) if _shield else out
 
-    out_fields = [f for f in u.schema.fields if f.name != "__side__"]
+
+def _merge_asof_stream_latest(
+    left: SparkDF,
+    right: SparkDF,
+    on: str,
+    by: list,
+    tolerance: str | None,
+    suffixes: tuple,
+) -> SparkDF:
+    """The latest-right asof regime (see merge_asof_stream), one
+    stateful call per key bucket.
+
+    State per bucket: one array per ``by`` column, ``__ts__`` (int64
+    epoch-µs) and one array per right payload column — entry i is key
+    i's latest right row. Each call sorts the bucket's batch rows by
+    (key, stamp, side) with the carried rows first in their key; a
+    left's match is then the last right (or carried) row before it in
+    its key — a groupwise running max over right positions."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    u0, payload, _, _, r_types = _asof_union(left, right, on, by, suffixes)
+    u_types = dict(u0.dtypes)
+    # an integral column reaches pandas as float64 when its frame holds
+    # a NULL, which rounds ids above 2**53 — and one bucket's frame
+    # mixes a NULL key with other keys. Integral keys therefore travel
+    # as exact decimals (grouped and stored exactly) and are restored
+    # to Python ints on output.
+    int_by = [k for k in by if u_types[k] in _INTEGRAL]
+    u = u0.withColumn("__bucket__", _asof_bucket(by)).withColumns(
+        {k: F.col(qi(k)).cast("decimal(20,0)") for k in int_by}
+    )
+
+    out_fields = [f for f in u0.schema.fields if f.name != "__side__"]
     out_schema = ", ".join(
         f"{qi(f.name)} {f.dataType.simpleString()}" for f in out_fields
     )
     out_cols = [f.name for f in out_fields]
-    # state: the latest right row — stamp as int64 epoch-µs plus payload
-    state_schema = "__ts__ long, " + ", ".join(
-        f"{qi(c)} {r_types[c]}" for c in payload
+    carried = [*by, *payload]
+    state_schema = ", ".join(
+        [f"{qi(k)} array<{u_types[k]}>" for k in by]
+        + ["`__ts__` array<bigint>"]
+        + [f"{qi(c)} array<{r_types[c]}>" for c in payload]
     )
+    casts = {c: _state_cast(u_types[c]) for c in carried}
     tol_us = (
         int(parse_offset_seconds(tolerance.replace(" ", "")) * 1_000_000)
         if tolerance is not None else None
     )
+    nb = len(by)
+    NEG = np.iinfo("int64").min
 
     def fn(key, pdfs, state):
-        prev = state.get if state.exists else None
         pdf = pd.concat(list(pdfs), ignore_index=True)
-        # right rows sort before left at equal stamps (exact matches
-        # allowed); stable sort keeps frame order among equal rights —
-        # searchsorted side='right' then picks the LAST (pandas rule)
-        pdf = pdf.sort_values([on, "__side__"], kind="stable", ignore_index=True)
-        ts_us = pdf[on].to_numpy(dtype="datetime64[us]").astype("int64")
-        is_r = (pdf["__side__"] == 0).to_numpy()
-        rights = pdf[is_r]
-        r_us = ts_us[is_r]
-        lefts = pdf[~is_r].reset_index(drop=True)
-        l_us = ts_us[~is_r]
-        idx = np.searchsorted(r_us, l_us, side="right") - 1
-        # vectorized match/fallback (the per-row python loop with an
-        # inner payload.index() scan was O(rows × payload²) on the hot
-        # applyInPandasWithState path): rows with an in-batch match
-        # (idx >= 0) gather from this batch's rights; the rest take the
-        # carried state row; tolerance then nulls stale matches
-        has = idx >= 0
-        prev_ts = prev[0] if prev is not None else np.iinfo("int64").min
-        if len(r_us):
-            m_ts = np.where(has, r_us[np.where(has, idx, 0)], prev_ts)
-        else:
-            m_ts = np.full(len(lefts), prev_ts, dtype="int64")
+        ts = pdf[on].to_numpy(dtype="datetime64[us]").astype("int64")
+        side = pdf["__side__"].to_numpy(dtype="int64")
+        rows = pdf[carried]
+        m = 0
+        if state.exists:
+            # carried rows: side -1 and a NEG sort stamp put them first
+            # in their key, so any in-batch right at or before a left
+            # wins over them (the latest-right contract)
+            st = list(state.get)
+            ts_c = st.pop(nb)
+            m = len(ts_c)
+            carry = pd.DataFrame(
+                {c: pd.Series(v, dtype=object) for c, v in zip(carried, st)}
+            )
+            rows = pd.concat([carry, rows], ignore_index=True)
+            ts = np.concatenate([np.asarray(ts_c, dtype="int64"), ts])
+            side = np.concatenate([np.full(m, -1, dtype="int64"), side])
+        # NULL keys group together, as Spark's per-key grouping does
+        gid = rows.groupby(by, dropna=False, sort=False).ngroup().to_numpy()
+        # stable: among equal stamps rights keep frame order, so the
+        # running max picks the LAST arrival (pandas' backward rule)
+        o = np.lexsort((side, np.where(side < 0, NEG, ts), gid))
+        g = gid[o]
+        pos = np.arange(len(o))
+        first = np.r_[True, g[1:] != g[:-1]]
+        start = np.maximum.accumulate(np.where(first, pos, 0))
+        last_r = np.maximum.accumulate(np.where(side[o] <= 0, pos, -1))
+        last_r = np.where(last_r >= start, last_r, -1)  # reset per key
+
+        is_l = side[o] == 1
+        li = o[is_l]
+        mi = last_r[is_l]
+        has = mi >= 0
+        src = o[np.where(has, mi, 0)]
         if tol_us is not None:
-            # gap only where a match VALUE exists (in-batch or carried
-            # state) — the int64.min no-state sentinel would overflow
-            # the subtraction (advisor-found; previously benign only
-            # because those rows were already None, but wraparound is
-            # UB-shaped and numpy warns)
-            matched = has | (prev is not None)
-            safe_m = np.where(matched, m_ts, l_us)
-            stale = matched & (l_us - safe_m > tol_us)
-        else:
-            stale = None
-        for pi, c in enumerate(payload):
-            rv = rights[c].to_numpy()
-            col = np.empty(len(lefts), dtype=object)
-            col[has] = rv[idx[has]]
-            col[~has] = prev[1 + pi] if prev is not None else None
-            if stale is not None:
-                col[stale] = None
-            lefts[c] = pd.Series(col).astype(lefts[c].dtype, errors="ignore")
-        if len(rights):
-            last = rights.iloc[-1]
-            vals = []
-            for c in payload:
-                v = last[c]
-                vals.append(None if pd.isna(v) else
-                            (v.item() if hasattr(v, "item") else v))
-            state.update((int(r_us[-1]), *vals))
+            has &= ts[li] - ts[src] <= tol_us
+        lefts = pdf.take(li - m).reset_index(drop=True)
+        for c in payload:
+            vals = rows[c].to_numpy(dtype=object)[src]
+            vals[~has] = None
+            lefts[c] = pd.Series(vals).astype(lefts[c].dtype, errors="ignore")
+        for k in int_by:
+            lefts[k] = pd.Series(
+                [None if pd.isna(v) else int(v) for v in lefts[k]], dtype=object
+            )
+
+        if (side == 0).any():
+            # new state: each key's last right-or-carried row
+            ends = np.r_[g[1:] != g[:-1], True]
+            keep = last_r[ends]
+            keep = o[keep[keep >= 0]]
+            kept = rows.take(keep)
+            cols = []
+            for c in carried:
+                cast = casts[c]
+                cols.append([None if pd.isna(v) else cast(v)
+                             for v in kept[c].tolist()])
+            cols.insert(nb, ts[keep].tolist())
+            state.update(tuple(cols))
         if len(lefts):
             yield lefts[out_cols]
 
-    timeout_conf = getattr(GroupStateTimeout, timeout)
     return (
-        u.groupBy(*by)
-        .applyInPandasWithState(fn, out_schema, state_schema, "append", timeout_conf)
+        u.groupBy("__bucket__")
+        .applyInPandasWithState(
+            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout,
+        )
     )
 
 
@@ -567,7 +658,6 @@ def _merge_asof_stream_buffered(
     direction: str,
     tolerance: str | None,
     lateness: str,
-    timeout: str,
     suffixes: tuple,
 ) -> SparkDF:
     """The watermark-buffered asof regime (see merge_asof_stream).
@@ -584,21 +674,7 @@ def _merge_asof_stream_buffered(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    overlap = (set(left.columns) & set(right.columns)) - {on} - set(by)
-    l = left.withColumnsRenamed({c: c + suffixes[0] for c in overlap})
-    r = right.withColumnsRenamed({c: c + suffixes[1] for c in overlap})
-    payload = [c for c in r.columns if c != on and c not in by]
-    l_cols = [c for c in l.columns if c != on and c not in by]
-    r_types = dict(r.dtypes)
-    l_types = dict(l.dtypes)
-    l_tag = l.selectExpr(
-        "*", "1 AS `__side__`",
-        *[f"CAST(NULL AS {r_types[c]}) AS {qi(c)}" for c in payload],
-    )
-    r_tag = r.selectExpr(
-        "*", "0 AS `__side__`",
-        *[f"CAST(NULL AS {l_types[c]}) AS {qi(c)}" for c in l_cols],
-    )
+    u0, payload, l_cols, l_types, r_types = _asof_union(left, right, on, by, suffixes)
     # Spark's GLOBAL event-time watermark drives finalization (a
     # per-key "max seen − lateness" would never advance for a key with
     # no new arrivals — r9 fuzz-found): withWatermark feeds
@@ -606,7 +682,6 @@ def _merge_asof_stream_buffered(
     # idle keys once the watermark passes their earliest pending
     # decision stamp (Structured Streaming runs no-data micro-batches
     # to fire these, including before an availableNow run terminates).
-    u0 = l_tag.unionByName(r_tag)
     u = _with_watermark(u0, on, lateness)  # NTZ event time casts first
 
     # output schema from the PRE-cast union: the watermark cast is an
@@ -629,21 +704,8 @@ def _merge_asof_stream_buffered(
         if tolerance is not None else None
     )
     NEG = np.iinfo("int64").min
-
-    # pandas widens NULL-padded integer columns to float64 (the union
-    # pads each side's missing columns with typed NULLs), so a bigint
-    # left column arrives as 504.0 — which an array<bigint> state field
-    # NULLs on write (r9-found: every emitted event_id was NULL). Cast
-    # buffered values back to their state type.
-    def _mk_cast(t: str):
-        if t in ("tinyint", "smallint", "int", "bigint"):
-            return lambda v: int(v)
-        if t in ("float", "double"):
-            return lambda v: float(v)
-        return lambda v: v.item() if hasattr(v, "item") else v
-
-    l_cast = {c: _mk_cast(l_types[c]) for c in l_cols}
-    r_cast = {c: _mk_cast(r_types[c]) for c in payload}
+    l_cast = {c: _state_cast(l_types[c]) for c in l_cols}
+    r_cast = {c: _state_cast(r_types[c]) for c in payload}
 
     def fn(key, pdfs, state):
         if state.exists:

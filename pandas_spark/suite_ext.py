@@ -4752,7 +4752,8 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> SparkDF:
 def streaming_merge_asof(spark: SparkSession, sf_dir: str) -> SparkDF:
     """merge_asof(direction='backward', by=) executed THROUGH
     Structured Streaming (streaming/core.py merge_asof_stream: union +
-    per-key applyInPandasWithState, ONE right row of state per key) and
+    applyInPandasWithState per key hash bucket, whose state holds each
+    of its keys' latest right row) and
     checked against DuckDB's native ASOF JOIN — closing SURVEY §2.10's
     "merge_asof ≙ stream-stream asof join w/ watermark" mapping with
     asof-backward semantics (tolerance_join_stream covers only the

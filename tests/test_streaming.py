@@ -458,6 +458,97 @@ def test_merge_asof_stream_state_across_micro_batches(spark, tmp_path):
     assert got == {0: None, 1: 1.5, 2: 2.5, 3: 2.5}
 
 
+def test_merge_asof_stream_colliding_keys_keep_separate_state(spark, tmp_path):
+    """Keys that share a state bucket must each carry their OWN latest
+    right row. Three (bigint, string) keys — one with a NULL part —
+    chosen to land in one bucket by the module's own bucket expression,
+    streamed through 3 micro-batches; every left's match is written out
+    by hand. The ids sit above 2**53, where a float64 detour (a NULL key
+    in the bucket's pandas frame) would round neighbours together."""
+    import pandas as pd
+
+    from pandas_spark.streaming import core
+
+    base = 2**60
+    cand = [(k, s) for k in [None, *range(base, base + 200)]
+            for s in ["a", "b", None]]
+    buckets = {}
+    for r in (
+        spark.createDataFrame(cand, "k bigint, s string")
+        .select("k", "s", core._asof_bucket(["k", "s"]).alias("b"))
+        .collect()
+    ):
+        buckets.setdefault(r["b"], []).append((r["k"], r["s"]))
+    # a bucket holding a NULL-part key and two all-valued keys
+    shared = next(
+        ks for ks in buckets.values()
+        if any(None in key for key in ks)
+        and sum(None not in key for key in ks) >= 2
+    )
+    N = next(key for key in shared if None in key)
+    A, B = [key for key in shared if None not in key][:2]
+    assert (
+        spark.createDataFrame([A, B, N], "k bigint, s string")
+        .select(core._asof_bucket(["k", "s"]).alias("b"))
+        .distinct().count() == 1
+    )
+
+    # (batch, key, side, ts_s, lid or v)
+    rows = [
+        (0, A, "r", 10, 1.0), (0, B, "r", 20, 2.0), (0, N, "r", 30, 3.0),
+        (0, A, "l", 15, 0), (0, B, "l", 25, 1), (0, N, "l", 5, 2),
+        (1, B, "r", 150, 20.0),
+        (1, A, "l", 110, 3), (1, B, "l", 160, 4), (1, N, "l", 120, 5),
+        (1, B, "l", 140, 6),
+        (2, A, "r", 250, 100.0),
+        (2, A, "l", 210, 7), (2, A, "l", 260, 8), (2, B, "l", 220, 9),
+        (2, N, "l", 230, 10), (2, N, "l", 240, 11),
+    ]
+    want = {
+        0: 1.0, 1: 2.0, 2: None,    # in-batch matches; N has none yet
+        3: 1.0, 5: 3.0, 6: 2.0,     # carried; B@140 predates B's right@150
+        4: 20.0,                    # in-batch
+        7: 1.0, 9: 20.0, 10: 3.0, 11: 3.0,  # carried into a third batch
+        8: 100.0,
+    }
+    src = tmp_path / "src"
+    src.mkdir()
+    for b in range(3):
+        part = [r for r in rows if r[0] == b]
+        pd.DataFrame({
+            "k": pd.array([key[0] for _, key, *_ in part], dtype="Int64"),
+            "s": [key[1] for _, key, *_ in part],
+            "ts": pd.to_datetime([t for *_, t, _ in part], unit="s"),
+            "lid": pd.array([x if sd == "l" else None
+                             for _, _, sd, _, x in part], dtype="Int64"),
+            "side": [sd for _, _, sd, _, _ in part],
+            "v": [float(x) if sd == "r" else None for _, _, sd, _, x in part],
+        }).to_parquet(src / f"b{b}.parquet", index=False)
+
+    stream = pss.read_stream_parquet(spark, str(src))
+    lstream = stream.where("side = 'l'").select("k", "s", "ts", "lid")
+    rstream = stream.where("side = 'r'").select("k", "s", "ts", "v")
+    out = pss.merge_asof_stream(lstream, rstream, on="ts", by=["k", "s"])
+    q = (
+        out.writeStream.format("memory")
+        .queryName("t_asof_collide")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 3
+    got = {
+        r["lid"]: ((r["k"], r["s"]), r["v"])
+        for r in spark.table("t_asof_collide").collect()
+    }
+    key_of = {x: key for _, key, sd, _, x in rows if sd == "l"}
+    assert got == {lid: (key_of[lid], v) for lid, v in want.items()}
+    # one state row per touched bucket: all three keys share one
+    assert q.lastProgress["stateOperators"][0]["numRowsTotal"] == 1
+
+
 # ---------------------------------------------------------------------------
 # streaming merge_asof batch-parity fuzz: random data, random time-contiguous
 # micro-batch splits, always compared against batch merge_asof on the same
@@ -471,9 +562,11 @@ from hypothesis import HealthCheck, given, settings, strategies as st  # noqa: E
 def _asof_case(draw):
     import pandas as pd
 
-    n_l = draw(st.integers(1, 40))
-    n_r = draw(st.integers(0, 25))
-    keys = draw(st.lists(st.integers(1, 3), min_size=1, max_size=3, unique=True))
+    n_l = draw(st.integers(1, 60))
+    n_r = draw(st.integers(0, 40))
+    # key SLOTS: the latest-right fuzz maps slot i to a key of state
+    # bucket i % 2 (asof_key_pool), so any 3 keys share a bucket
+    keys = draw(st.lists(st.integers(0, 15), min_size=1, max_size=8, unique=True))
     # second-granularity stamps in a small range → exact-match collisions
     # between left and right are common; right (k, ts) stays UNIQUE so the
     # equal-stamp tie rule (frame order) can't differ between harnesses
@@ -502,6 +595,25 @@ def _asof_case(draw):
     return left, right, cuts, tol
 
 
+@pytest.fixture(scope="module")
+def asof_key_pool(spark):
+    """16 bigint keys, slot i in the state bucket of slot i % 2 —
+    buckets from the module's own expression, so the latest-right
+    fuzz always has keys sharing carried state whatever
+    ``_ASOF_BUCKETS`` is."""
+    from pandas_spark.streaming import core
+
+    by_bucket = {}
+    for r in (
+        spark.range(2000).withColumnRenamed("id", "k")
+        .select("k", core._asof_bucket(["k"]).alias("b"))
+        .collect()
+    ):
+        by_bucket.setdefault(r["b"], []).append(r["k"])
+    b0, b1 = [ks for ks in by_bucket.values() if len(ks) >= 8][:2]
+    return [b0[i // 2] if i % 2 == 0 else b1[i // 2] for i in range(16)]
+
+
 @settings(
     max_examples=int(os.environ.get("STREAM_FUZZ_EXAMPLES", "5")),
     deadline=None,
@@ -509,7 +621,8 @@ def _asof_case(draw):
     suppress_health_check=list(HealthCheck),
 )
 @given(case=_asof_case())
-def test_merge_asof_stream_fuzz_matches_batch(spark, tmp_path_factory, case):
+def test_merge_asof_stream_fuzz_matches_batch(spark, tmp_path_factory,
+                                              asof_key_pool, case):
     """Random asof inputs through the streaming operator (random
     time-contiguous micro-batch splits, so carried state crosses batch
     boundaries at arbitrary points) must equal batch merge_asof —
@@ -519,6 +632,8 @@ def test_merge_asof_stream_fuzz_matches_batch(spark, tmp_path_factory, case):
     import pandas_spark as ps
 
     left, right, cuts, tol = case
+    left = left.assign(k=[asof_key_pool[k] for k in left.k])
+    right = right.assign(k=[asof_key_pool[k] for k in right.k])
     tmp_path = tmp_path_factory.mktemp("asof_fuzz")
     src = tmp_path / "src"
     src.mkdir()
