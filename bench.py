@@ -222,6 +222,10 @@ def main() -> None:
             # state the suite numbers were taken under, so a future
             # reader can tell "code got slower" from "box got slower".
             "box_calib_ms": out["box_calib_ms"],
+            # the core count the numbers were taken at (BASELINE.md's
+            # config column); local[*] resolved to the cores it got
+            "master": spark.sparkContext.master.replace(
+                "*", str(len(os.sched_getaffinity(0)))),
             "result": out,
         }
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),

@@ -41,6 +41,8 @@ def main() -> None:
     with open(os.path.join(ROOT, "BENCH_HEAD.json")) as f:
         rec = json.load(f)
     eng = rec["result"]["queries"]
+    # records before the master stamp were all taken on 32 cores
+    master = rec.get("master", "local[32]")
     # Prefer the IN-RUN pandas probes (r10 verdict #1b/#4: bench.py
     # times the pandas side of every headline query in the same run,
     # so both table columns carry ONE shared moment stamp); fall back
@@ -64,7 +66,7 @@ def main() -> None:
         tot_p += p
         tot_e += e
         lines.append(
-            f"| {label} | {p} | {e} | {e / p:.1f}× | sf0.1, local[32] | `{k}` |"
+            f"| {label} | {p} | {e} | {e / p:.1f}× | sf0.1, {master} | `{k}` |"
         )
     table = "\n".join(lines)
     norm = rec["result"].get("headline_aggregate_ratio_calib_normalized")
