@@ -353,7 +353,9 @@ def streaming_state_report(query) -> dict:
     watermark — e.g. an idle source) is holding rows; a nonzero
     ``rows_dropped_by_watermark`` means events arrived later than the
     declared ``lateness=`` and were EXCLUDED from results — widen the
-    horizon if those rows matter.
+    horizon if those rows matter. Each operator's ``partitions`` is the
+    state partition count the stream is fixed at, and ``commit_ms`` the
+    batch's summed state-store commit time.
     """
     p = query.lastProgress or {}
     return _progress_state(p)
@@ -377,6 +379,10 @@ def _progress_state(p: dict) -> dict:
                 "dropped_by_watermark": int(
                     o.get("numRowsDroppedByWatermark") or 0
                 ),
+                # fixed at the stream's first batch, for the life of
+                # its checkpoint; each one commits its own state store
+                "partitions": int(o.get("numShufflePartitions") or 0),
+                "commit_ms": int(o.get("commitTimeMs") or 0),
             }
             for o in ops
         ],

@@ -59,10 +59,15 @@ def get_spark(app_name: str = "pandas_spark", **extra: str) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``);
-    shuffle partitions default to the local core count so tiny local
-    runs don't pay 200-way shuffles, while cluster deployments pass
-    their own value via ``extra``. The first launch of the driver JVM
-    trains a class-data archive that later launches map (``_jvmstart``).
+    shuffle partitions default to the local core count (the CPU
+    affinity set for ``*``), so tiny local runs don't pay 200-way
+    shuffles. That count is also every new stateful stream's state
+    partition count, fixed at the stream's first batch for the life of
+    its checkpoint (SCALE.md, "Streaming state partitions"). Cluster
+    deployments pass their own value via ``extra`` or
+    ``SPARK_GRAFT_SHUFFLE_PARTITIONS``. The first launch of the driver
+    JVM trains a class-data archive that later launches map
+    (``_jvmstart``).
     """
     if os.environ.get("SPARK_GRAFT_PROFILE"):
         profile(os.environ["SPARK_GRAFT_PROFILE"])
@@ -163,7 +168,8 @@ _SMALL_PLAN_BYTES = 64 << 20
 # (~2 MiB per partition, swept at sf0.1 and the 10x decade): a 2 MB
 # plan shuffles 4 ways (less scheduling than 32 near-empty tasks); a
 # 20 MB plan keeps ~10-way parallelism for compute-heavy stages
-# (windows) that AQE would otherwise have run wide
+# (windows) that AQE would otherwise have run wide. Never more than the
+# session default (one per core), which no small plan needs
 _SMALL_PLAN_PART_BYTES = 2 << 20
 # large-mode initial shuffle partitions scale with the proven source
 # bytes too (r12; guide §2.2/§2.5 "fewer, larger reduce partitions" via
@@ -245,7 +251,7 @@ def tune_for_plan(sdf) -> None:
                 _tune_state["baseline"] = dict(cur)
             base = _tune_state["baseline"]
             default_parts = int(base["spark.sql.shuffle.partitions"])
-            parts = max(4, min(default_parts, total // _SMALL_PLAN_PART_BYTES))
+            parts = min(default_parts, max(4, total // _SMALL_PLAN_PART_BYTES))
             want = {
                 "spark.sql.adaptive.enabled": "false",
                 "spark.sql.shuffle.partitions": str(parts),
@@ -294,11 +300,14 @@ def tune_for_plan(sdf) -> None:
 
 
 def _shuffle_partitions(cpus: str) -> int:
+    # one partition per core, no floor: a stream's state partitions
+    # come from this count, and more partitions than cores run every
+    # stateful micro-batch in waves of state-store commits
     if cpus == "*":
         # local[*] sizes from the JVM's available processors, which
         # follow CPU affinity, not from the machine's core count
-        return max(len(os.sched_getaffinity(0)), 8)
+        return len(os.sched_getaffinity(0))
     try:
-        return max(int(cpus), 8)
+        return int(cpus)
     except ValueError:
         return 32

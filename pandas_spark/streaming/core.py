@@ -274,7 +274,6 @@ def running_agg_stream(
     keys: Sequence[str],
     value_col: str,
     order_col: str,
-    timeout: str = "NoTimeout",
 ) -> SparkDF:
     """Streaming ``groupby().cumsum()/cumcount()`` — a custom stateful
     operator via ``applyInPandasWithState`` (SURVEY §2.10: running
@@ -310,10 +309,11 @@ def running_agg_stream(
         state.update((float(pdf["running_sum"].iloc[-1]), int(pdf["running_count"].iloc[-1])))
         yield pdf[in_cols + ["running_sum", "running_count"]]
 
-    timeout_conf = getattr(GroupStateTimeout, timeout)
     return (
         sdf.groupBy(*keys)
-        .applyInPandasWithState(fn, out_schema, state_schema, "append", timeout_conf)
+        .applyInPandasWithState(
+            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout,
+        )
     )
 
 
@@ -324,7 +324,6 @@ def ewm_mean_stream(
     order_col: str,
     alpha: float,
     adjust: bool = True,
-    timeout: str = "NoTimeout",
 ) -> SparkDF:
     """Streaming EWM mean — the incremental twin of pandas'
     ``ewm.online`` (reference window/ewm.py:413
@@ -374,10 +373,11 @@ def ewm_mean_stream(
         state.update((float(num), float(den)))
         yield pdf[in_cols + [f"{value_col}_ewm"]]
 
-    timeout_conf = getattr(GroupStateTimeout, timeout)
     return (
         sdf.groupBy(*keys)
-        .applyInPandasWithState(fn, out_schema, state_schema, "append", timeout_conf)
+        .applyInPandasWithState(
+            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout,
+        )
     )
 
 
@@ -407,15 +407,28 @@ _INTEGRAL = ("tinyint", "smallint", "int", "bigint")
 def _state_cast(t: str):
     """Python value → the value an ``array<t>`` state field stores.
 
-    pandas widens NULL-padded integer columns to float64 (the asof
-    union pads each side's missing columns with typed NULLs), so a
-    bigint arrives as 504.0 — which an integral state field NULLs on
-    write. Cast back to the state type; unwrap numpy scalars."""
+    Integral columns arrive as exact ``Decimal``s (``_exact_integrals``),
+    which an integral state field does not take as they are. Cast back
+    to the state type; unwrap numpy scalars."""
     if t in _INTEGRAL:
         return int
     if t in ("float", "double"):
         return float
     return lambda v: v.item() if hasattr(v, "item") else v
+
+
+def _exact_integrals(u: SparkDF, cols) -> tuple[SparkDF, list]:
+    """``u`` with every integral column of ``cols`` cast to
+    ``decimal(20,0)``, and the names of those columns.
+
+    PySpark hands pandas an integral column as float64 whenever its
+    batch holds a NULL, which rounds values above 2**53. The asof union
+    NULL-pads each side's columns, and a bucket's frame can mix a NULL
+    key with other keys, so these columns travel as exact decimals;
+    ``_state_cast`` and the output restore them to Python ints."""
+    types = dict(u.dtypes)
+    ints = [c for c in cols if types[c] in _INTEGRAL]
+    return u.withColumns({c: F.col(qi(c)).cast("decimal(20,0)") for c in ints}), ints
 
 
 def _asof_union(left, right, on, by, suffixes):
@@ -549,21 +562,17 @@ def _merge_asof_stream_latest(
 
     u0, payload, _, _, r_types = _asof_union(left, right, on, by, suffixes)
     u_types = dict(u0.dtypes)
-    # an integral column reaches pandas as float64 when its frame holds
-    # a NULL, which rounds ids above 2**53 — and one bucket's frame
-    # mixes a NULL key with other keys. Integral keys therefore travel
-    # as exact decimals (grouped and stored exactly) and are restored
-    # to Python ints on output.
-    int_by = [k for k in by if u_types[k] in _INTEGRAL]
-    u = u0.withColumn("__bucket__", _asof_bucket(by)).withColumns(
-        {k: F.col(qi(k)).cast("decimal(20,0)") for k in int_by}
-    )
-
     out_fields = [f for f in u0.schema.fields if f.name != "__side__"]
     out_schema = ", ".join(
         f"{qi(f.name)} {f.dataType.simpleString()}" for f in out_fields
     )
     out_cols = [f.name for f in out_fields]
+    # keys, left columns and payload: integral ones are grouped, stored
+    # and emitted exactly
+    u, int_cols = _exact_integrals(
+        u0.withColumn("__bucket__", _asof_bucket(by)),
+        [c for c in out_cols if c != on],
+    )
     carried = [*by, *payload]
     state_schema = ", ".join(
         [f"{qi(k)} array<{u_types[k]}>" for k in by]
@@ -621,7 +630,7 @@ def _merge_asof_stream_latest(
             vals = rows[c].to_numpy(dtype=object)[src]
             vals[~has] = None
             lefts[c] = pd.Series(vals).astype(lefts[c].dtype, errors="ignore")
-        for k in int_by:
+        for k in int_cols:
             lefts[k] = pd.Series(
                 [None if pd.isna(v) else int(v) for v in lefts[k]], dtype=object
             )
@@ -682,7 +691,8 @@ def _merge_asof_stream_buffered(
     # idle keys once the watermark passes their earliest pending
     # decision stamp (Structured Streaming runs no-data micro-batches
     # to fire these, including before an availableNow run terminates).
-    u = _with_watermark(u0, on, lateness)  # NTZ event time casts first
+    # NTZ event time casts first; buffered integral columns stay exact
+    u, _ = _exact_integrals(_with_watermark(u0, on, lateness), [*l_cols, *payload])
 
     # output schema from the PRE-cast union: the watermark cast is an
     # internal requirement, the caller keeps the source's ts flavor
@@ -958,7 +968,6 @@ def kmeans_stream(
     vec_col: str,
     init_centroids: Sequence[Sequence[float]],
     order_col: str | None = None,
-    timeout: str = "NoTimeout",
 ) -> SparkDF:
     """Streaming mini-batch k-means (Sculley 2010, "Web-Scale K-Means
     Clustering"): centroids live in stream state and every arriving
@@ -1009,9 +1018,10 @@ def kmeans_stream(
         state.update(([float(x) for x in C.ravel()], [int(x) for x in n]))
         yield pdf[in_cols + ["cell"]]
 
-    timeout_conf = getattr(GroupStateTimeout, timeout)
     return (
         sdf.withColumn("__g__", F.lit(0))
         .groupBy("__g__")
-        .applyInPandasWithState(fn, out_schema, state_schema, "append", timeout_conf)
+        .applyInPandasWithState(
+            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout,
+        )
     )

@@ -125,7 +125,8 @@ def test_shuffle_partitions_follow_cpu_affinity(monkeypatch):
     monkeypatch.setattr(os, "sched_getaffinity", lambda pid: set(range(12)))
     assert session._shuffle_partitions("*") == 12
     monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1})
-    assert session._shuffle_partitions("*") == 8  # the floor
+    assert session._shuffle_partitions("*") == 2  # no floor above the cores
+    assert session._shuffle_partitions("3") == 3
 
 
 def test_first_process_trains_one_archive(two_starts):
