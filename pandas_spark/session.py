@@ -168,8 +168,8 @@ _SMALL_PLAN_BYTES = 64 << 20
 # (~2 MiB per partition, swept at sf0.1 and the 10x decade): a 2 MB
 # plan shuffles 4 ways (less scheduling than 32 near-empty tasks); a
 # 20 MB plan keeps ~10-way parallelism for compute-heavy stages
-# (windows) that AQE would otherwise have run wide. Never more than the
-# session default (one per core), which no small plan needs
+# (windows) that AQE would otherwise have run wide — capped at the
+# session default (one per core locally), never wider than the box
 _SMALL_PLAN_PART_BYTES = 2 << 20
 # large-mode initial shuffle partitions scale with the proven source
 # bytes too (r12; guide §2.2/§2.5 "fewer, larger reduce partitions" via
