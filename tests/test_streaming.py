@@ -549,62 +549,6 @@ def test_merge_asof_stream_colliding_keys_keep_separate_state(spark, tmp_path):
     assert q.lastProgress["stateOperators"][0]["numRowsTotal"] == 1
 
 
-_BIG = 2**60
-
-
-def _write_big_int_batches(src, batches):
-    """One trigger file per batch of (side, ts_s, lid_or_rv) rows on key
-    1, where ``lid`` (left) and ``rv`` (right payload) are bigints."""
-    import pandas as pd
-
-    src.mkdir()
-    for i, rows in enumerate(batches):
-        pd.DataFrame({
-            "k": [1] * len(rows),
-            "ts": pd.to_datetime([_ASOF_BASE_S + t for _, t, _ in rows], unit="s"),
-            "lid": pd.array([x if s == "l" else None for s, _, x in rows],
-                            dtype="Int64"),
-            "side": [s for s, _, _ in rows],
-            "rv": pd.array([x if s == "r" else None for s, _, x in rows],
-                           dtype="Int64"),
-        }).to_parquet(src / f"b{i:02d}.parquet", index=False)
-
-
-def _big_int_asof(spark, src, name, **kw):
-    stream = pss.read_stream_parquet(spark, str(src))
-    out = pss.merge_asof_stream(
-        stream.where("side = 'l'").select("k", "ts", "lid"),
-        stream.where("side = 'r'").select("k", "ts", "rv"),
-        on="ts", by=["k"], **kw,
-    )
-    pss.run_to_memory(out, name, output_mode="append")
-    return {r["lid"]: r["rv"] for r in spark.table(name).collect()}
-
-
-def test_merge_asof_stream_latest_keeps_big_integral_columns_exact(spark, tmp_path):
-    """Left and right-payload bigints above 2**53 come out exact in the
-    latest-right regime, in-batch and carried through state. The union
-    NULL-pads each side, so a float64 detour would round them."""
-    _write_big_int_batches(tmp_path / "src", [
-        [("r", 10, _BIG + 1), ("l", 15, _BIG + 3), ("l", 5, _BIG + 5)],
-        [("l", 20, _BIG + 7)],
-    ])
-    got = _big_int_asof(spark, tmp_path / "src", "t_asof_big_latest")
-    assert got == {_BIG + 3: _BIG + 1, _BIG + 5: None, _BIG + 7: _BIG + 1}
-
-
-def test_merge_asof_stream_buffered_keeps_big_integral_columns_exact(spark, tmp_path):
-    """The same exactness in the watermark-buffered regime, whose
-    buffers hold left columns and right payload across batches."""
-    _write_big_int_batches(tmp_path / "src", [
-        [("r", 90, _BIG + 1), ("l", 100, _BIG + 3), ("l", 200, _BIG + 5)],
-        [("r", 180, _BIG + 7), ("l", 260, _BIG + 9)],
-    ])
-    got = _big_int_asof(spark, tmp_path / "src", "t_asof_big_buf",
-                        lateness="50 seconds")
-    assert got == {_BIG + 3: _BIG + 1, _BIG + 5: _BIG + 7}
-
-
 # ---------------------------------------------------------------------------
 # streaming merge_asof batch-parity fuzz: random data, random time-contiguous
 # micro-batch splits, always compared against batch merge_asof on the same
@@ -989,34 +933,35 @@ def test_merge_asof_stream_buffered_state_stays_bounded(spark, tmp_path):
     assert tail_peak <= peak
 
 
-def _asof_partition_files(src, batches):
-    """One trigger file per batch of (side, user, ts_s, x) rows: ``x``
-    is the left's ``lid`` or the right's ``v``."""
+def _write_asof_batches(src, batches, payload="float64"):
+    """One trigger file per batch of (side, k, ts_s, x) rows: ``x`` is
+    the left's bigint ``lid`` or the right's ``v`` of dtype ``payload``."""
     import pandas as pd
 
     src.mkdir(exist_ok=True)
     for i, rows in enumerate(batches):
         pd.DataFrame({
-            "k": [u for _, u, _, _ in rows],
-            "ts": pd.to_datetime([t for _, _, t, _ in rows], unit="s"),
+            "k": [k for _, k, _, _ in rows],
+            "ts": pd.to_datetime([_ASOF_BASE_S + t for _, _, t, _ in rows], unit="s"),
             "lid": pd.array([x if s == "l" else None for s, _, _, x in rows],
                             dtype="Int64"),
             "side": [s for s, _, _, _ in rows],
-            "v": [float(x) if s == "r" else None for s, _, _, x in rows],
+            "v": pd.array([x if s == "r" else None for s, _, _, x in rows],
+                          dtype=payload),
         }).to_parquet(src / f"b{i:02d}.parquet", index=False)
 
 
-def _run_asof_on_checkpoint(spark, src, tmp_path):
-    """Run the latest-right asof over ``src`` until it is drained, into
-    a parquet sink (the memory sink cannot resume a checkpoint); return
+def _run_asof_on_checkpoint(spark, tmp_path, **kw):
+    """Run the asof over ``tmp_path/src`` until it is drained, into a
+    parquet sink (the memory sink cannot resume a checkpoint); return
     the operator's state report and every {lid: v} the sink holds."""
     from pandas_spark.operators.diagnostics import streaming_state_report
 
-    stream = pss.read_stream_parquet(spark, str(src))
+    stream = pss.read_stream_parquet(spark, str(tmp_path / "src"))
     out = pss.merge_asof_stream(
         stream.where("side = 'l'").select("k", "ts", "lid"),
         stream.where("side = 'r'").select("k", "ts", "v"),
-        on="ts", by=["k"],
+        on="ts", by=["k"], **kw,
     )
     q = (
         out.writeStream.format("parquet")
@@ -1041,7 +986,8 @@ def _asof_batch_twin(spark, batches):
         rows = [r for b in batches for r in b if r[0] == which]
         return ps.from_pandas(spark, pd.DataFrame({
             "k": [u for _, u, _, _ in rows],
-            "ts": pd.to_datetime([t for _, _, t, _ in rows], unit="s"),
+            "ts": pd.to_datetime([_ASOF_BASE_S + t for _, _, t, _ in rows],
+                                 unit="s"),
             col: [float(x) for _, _, _, x in rows],
         }))
 
@@ -1059,8 +1005,8 @@ _PARTITION_BATCHES = [
 def test_fresh_stream_state_partitions_follow_session_default(spark, tmp_path):
     """A new stateful stream takes its state partition count from the
     session's shuffle partitions, which default to the core count."""
-    _asof_partition_files(tmp_path / "src", _PARTITION_BATCHES[:1])
-    op, got = _run_asof_on_checkpoint(spark, tmp_path / "src", tmp_path)
+    _write_asof_batches(tmp_path / "src", _PARTITION_BATCHES[:1])
+    op, got = _run_asof_on_checkpoint(spark, tmp_path)
     assert op["partitions"] == int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert got == _asof_batch_twin(spark, _PARTITION_BATCHES[:1])
 
@@ -1072,17 +1018,42 @@ def test_resumed_stream_keeps_its_checkpoint_partition_count(spark, tmp_path):
     keep working and keep their count."""
     key = "spark.sql.shuffle.partitions"
     default = spark.conf.get(key)
-    src = tmp_path / "src"
-    _asof_partition_files(src, _PARTITION_BATCHES[:1])
+    _write_asof_batches(tmp_path / "src", _PARTITION_BATCHES[:1])
     try:
         spark.conf.set(key, "8")
-        op1, got1 = _run_asof_on_checkpoint(spark, src, tmp_path)
+        op1, got1 = _run_asof_on_checkpoint(spark, tmp_path)
     finally:
         spark.conf.set(key, default)
     assert op1["partitions"] == 8
     assert got1 == _asof_batch_twin(spark, _PARTITION_BATCHES[:1])
-    _asof_partition_files(src, _PARTITION_BATCHES)  # adds the second file
-    op2, got2 = _run_asof_on_checkpoint(spark, src, tmp_path)
+    _write_asof_batches(tmp_path / "src", _PARTITION_BATCHES)  # adds a file
+    op2, got2 = _run_asof_on_checkpoint(spark, tmp_path)
     assert op2["partitions"] == 8
     assert spark.conf.get(key) == default  # the restore stays in the stream
     assert got2 == _asof_batch_twin(spark, _PARTITION_BATCHES)
+
+
+_BIG = 2**60
+
+
+def test_merge_asof_stream_latest_keeps_big_integral_columns_exact(spark, tmp_path):
+    """Left and right-payload bigints above 2**53 come out exact in the
+    latest-right regime, in-batch and carried through state. The union
+    NULL-pads each side, so a float64 detour would round them."""
+    _write_asof_batches(tmp_path / "src", [
+        [("r", 1, 10, _BIG + 1), ("l", 1, 15, _BIG + 3), ("l", 1, 5, _BIG + 5)],
+        [("l", 1, 20, _BIG + 7)],
+    ], payload="Int64")
+    _, got = _run_asof_on_checkpoint(spark, tmp_path)
+    assert got == {_BIG + 3: _BIG + 1, _BIG + 5: None, _BIG + 7: _BIG + 1}
+
+
+def test_merge_asof_stream_buffered_keeps_big_integral_columns_exact(spark, tmp_path):
+    """The same exactness in the watermark-buffered regime, whose
+    buffers hold left columns and right payload across batches."""
+    _write_asof_batches(tmp_path / "src", [
+        [("r", 1, 90, _BIG + 1), ("l", 1, 100, _BIG + 3), ("l", 1, 200, _BIG + 5)],
+        [("r", 1, 180, _BIG + 7), ("l", 1, 260, _BIG + 9)],
+    ], payload="Int64")
+    _, got = _run_asof_on_checkpoint(spark, tmp_path, lateness="50 seconds")
+    assert got == {_BIG + 3: _BIG + 1, _BIG + 5: _BIG + 7}
