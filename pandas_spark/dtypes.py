@@ -189,24 +189,6 @@ def to_spark_type(dtype: str | T.DataType) -> T.DataType:
     return T._parse_datatype_string(key)  # type: ignore[attr-defined]
 
 
-def to_pandas_dtype(spark_type: T.DataType) -> str:
-    mapping = {
-        T.ByteType: "Int8",
-        T.ShortType: "Int16",
-        T.IntegerType: "Int32",
-        T.LongType: "Int64",
-        T.FloatType: "float32",
-        T.DoubleType: "float64",
-        T.BooleanType: "boolean",
-        T.StringType: "string",
-        T.TimestampType: "datetime64[us]",
-        T.TimestampNTZType: "datetime64[us]",
-        T.DateType: "datetime64[us]",
-        T.BinaryType: "object",
-    }
-    return mapping.get(type(spark_type), "object")
-
-
 # --- TIMESTAMP vs TIMESTAMP_NTZ robustness -------------------------------
 #
 # Parquet timestamps without isAdjustedToUTC read as TIMESTAMP_NTZ under

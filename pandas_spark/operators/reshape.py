@@ -275,11 +275,6 @@ def pivot_table(
     return DataFrame(out)
 
 
-def _only_data_col(sdf_like, idx):
-    data = [c for c in sdf_like.columns if c not in idx]
-    return data[0] if data else "value"
-
-
 def pivot(
     frame: DataFrame,
     index: str | Sequence[str],

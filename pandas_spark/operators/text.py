@@ -69,70 +69,6 @@ def token_count_expr(text: Column, toks: Column | None = None) -> Column:
     return F.size(toks if toks is not None else tokens_expr(text))
 
 
-def bpe_ish_token_count_expr(text: Column) -> Column:
-    """BPE-style subword estimate: count word pieces + digits + punctuation
-    runs (a public regex approximation of tokenizer output size).
-    ``regexp_count`` counts matches without materializing them — the
-    ``size(regexp_extract_all(...))`` form allocated ~len/3 small
-    strings per document just to take the array length."""
-    return F.regexp_count(text, F.lit(r"[A-Za-z]{1,4}|[0-9]|[^A-Za-z0-9\s]"))
-
-
-def stopword_ratio_expr(text: Column, lang: str = "en", toks: Column | None = None) -> Column:
-    toks = toks if toks is not None else tokens_expr(text)
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
-def lang_scores_expr(text: Column, toks: Column | None = None) -> dict[str, Column]:
-    """Per-language stopword-hit ratio (the classic cheap lang-id signal)."""
-    toks = toks if toks is not None else tokens_expr(text)
-    n = F.greatest(F.size(toks), F.lit(1))
-    out = {}
-    for lang, words in STOPWORDS.items():
-        sw = F.array(*[F.lit(w) for w in words])
-        out[lang] = F.size(F.filter(toks, lambda t: F.array_contains(sw, t))) / n
-    return out
-
-
-def lang_id_expr(text: Column, toks: Column | None = None) -> Column:
-    """argmax over language scores; 'und' when nothing matches."""
-    scores = lang_scores_expr(text, toks=toks)
-    pairs = F.array(
-        *[F.struct(score.alias("s"), F.lit(lang).alias("l")) for lang, score in scores.items()]
-    )
-    best = F.array_max(pairs)  # struct compare: by s, then l
-    return F.when(best["s"] > 0, best["l"]).otherwise(F.lit("und"))
-
-
-def quality_score_expr(text: Column, toks: Column | None = None) -> Column:
-    """Heuristic document quality in [0,1]: length band + alpha ratio +
-    stopword presence + mean word length band (Gopher/C4-style public
-    heuristics, re-expressed as one Catalyst expression)."""
-    toks = toks if toks is not None else tokens_expr(text)
-    n_tok = F.size(toks)
-    n_chars = F.length(text)
-    alpha_ratio = F.regexp_count(text, F.lit(r"[A-Za-z]")) / F.greatest(n_chars, F.lit(1))
-    mean_word_len = n_chars / F.greatest(n_tok, F.lit(1))
-    sw_ratio = stopword_ratio_expr(text, toks=toks)
-    len_ok = (n_tok >= 10) & (n_tok <= 100000)
-    word_len_ok = (mean_word_len >= 3) & (mean_word_len <= 12)
-    return (
-        len_ok.cast("double") * 0.25
-        + word_len_ok.cast("double") * 0.25
-        + F.least(alpha_ratio * 0.5, F.lit(0.25)) * 2
-        + F.least(sw_ratio * 2.5, F.lit(0.25))
-    )
-
-
-def fingerprint_expr(text: Column) -> Column:
-    """64-bit content fingerprint of the *normalized* text — robust to
-    whitespace/punctuation/case changes (xxhash64, same algorithm
-    everywhere on the cluster)."""
-    return F.xxhash64(normalize_expr(text))
-
-
 def shingles_expr(text: Column, n: int = 5) -> Column:
     """Word n-gram shingles (array<string>) — the near-dup unit."""
     toks = tokens_expr(text)
@@ -144,19 +80,6 @@ def shingles_expr(text: Column, n: int = 5) -> Column:
             lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
         ),
     ).otherwise(F.array(F.array_join(toks, " ")))
-
-
-def _hits_expr(toks: Column, words: Sequence[str]) -> Column:
-    """Stopword hit COUNT via an int-accumulator fold — unlike
-    ``size(filter(...))`` it allocates no intermediate array per row
-    (the filtered-array churn was the dominant GC load in the
-    giant-corpus regime)."""
-    sw = F.array(*[F.lit(w) for w in words])
-    return F.aggregate(
-        toks,
-        F.lit(0),
-        lambda acc, x: acc + F.when(F.array_contains(sw, x), 1).otherwise(0),
-    )
 
 
 _ASCII_ALPHA = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
@@ -826,14 +749,6 @@ def gopher_rules(
         keep.alias("gopher_keep"),
     )
     return DataFrame(out)
-
-
-def gopher_filter(frame: DataFrame, text_col: str = "text", **kwargs) -> DataFrame:
-    """Rows passing every Gopher rule, original columns only."""
-    flagged = gopher_rules(frame, text_col=text_col, **kwargs)
-    return DataFrame(
-        flagged.spark.filter(F.col("gopher_keep")).select(*frame.spark.columns)
-    )
 
 
 def duplication_profile(

@@ -52,6 +52,25 @@ _DEFAULTS = {
     # our expression layer, overflow wraps are shimmed per-op).
     "spark.sql.ansi.enabled": "false",
     "spark.ui.enabled": "false",
+    # Stream checkpoints (offset and commit logs, file-source log, state
+    # deltas) through Hadoop FileSystem, not FileContext. On `file:`
+    # FileContext's RawLocalFs resolves every path with
+    # FileUtil.readLink, which forks a `readlink` process from the
+    # driver JVM: ~105 forks per stream_replay micro-batch, most of the
+    # per-partition state-commit floor. Measured on 4 cores: summed
+    # state commit per batch ~320 -> 19-99 ms, stream_replay
+    # pandas_ratio -27%. Both managers refuse a no-overwrite rename onto
+    # an existing file; on `file:` an overwrite is one atomic rename(2)
+    # here against delete-then-rename in FileContext. On HDFS,
+    # FileSystem.rename never overwrites, so a retried batch's delta
+    # rewrite keeps the old file: pass this key as
+    # "org.apache.spark.sql.execution.streaming.checkpointing."
+    # "FileContextBasedCheckpointFileManager" via get_spark(**extra)
+    # there (SCALE.md, "Checkpoint writes").
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 
@@ -206,6 +225,31 @@ def _conf_put(spark, key, value) -> None:
         spark.conf.set(key, value)
 
 
+def _proven_bytes(sdf) -> int | None:
+    """Summed leaf sizes of ``sdf``'s analyzed plan, or None when a
+    leaf's size is unknown. Spark estimates a stats-less leaf (e.g. a
+    ``LogicalRDD``) at ``spark.sql.defaultSizeInBytes`` (Long.MaxValue
+    by default); summing that would put a tiny plan in large mode at
+    the 1024-partition cap, and leave the cap set for whatever runs
+    next."""
+    leaves = sdf._jdf.queryExecution().analyzed().collectLeaves()
+    # full sum (the only early exit is an unknown leaf): large mode
+    # sizes its initial shuffle-partition count from the exact total
+    total, unknown_at = 0, None
+    for i in range(leaves.size()):
+        size = int(leaves.apply(i).stats().sizeInBytes())
+        if size >= _SMALL_PLAN_BYTES:
+            if unknown_at is None:
+                unknown_at = int(
+                    sdf.sparkSession._jsparkSession.sessionState()
+                    .conf().defaultSizeInBytes()
+                )
+            if size >= unknown_at:
+                return None
+        total += size
+    return total
+
+
 def tune_for_plan(sdf) -> None:
     """Set session exec knobs for ``sdf``'s size regime (idempotent).
 
@@ -218,16 +262,8 @@ def tune_for_plan(sdf) -> None:
     """
     try:
         spark = sdf.sparkSession
-        if sdf.isStreaming:
-            total, small = 0, False
-        else:
-            leaves = sdf._jdf.queryExecution().analyzed().collectLeaves()
-            # full sum (no early break): large mode sizes its initial
-            # shuffle-partition count from the exact byte total
-            total = 0
-            for i in range(leaves.size()):
-                total += int(leaves.apply(i).stats().sizeInBytes())
-            small = total < _SMALL_PLAN_BYTES
+        total = None if sdf.isStreaming else _proven_bytes(sdf)
+        small = total is not None and total < _SMALL_PLAN_BYTES
         keys = (
             "spark.sql.adaptive.enabled",
             "spark.sql.shuffle.partitions",
@@ -257,7 +293,7 @@ def tune_for_plan(sdf) -> None:
                 "spark.sql.shuffle.partitions": str(parts),
                 _INIT_PARTS_KEY: base[_INIT_PARTS_KEY],
             }
-        elif total >= _SMALL_PLAN_BYTES:
+        elif total is not None:
             # large mode: AQE stays on; seed its coalescer with a
             # byte-derived initial partition count so per-task sort/agg
             # state stays bounded (spill-lottery fix, header comment)
@@ -277,7 +313,7 @@ def tune_for_plan(sdf) -> None:
                 _INIT_PARTS_KEY: str(init),
             }
         else:
-            # unknown size (streaming / statless leaves): full restore
+            # unknown size (streaming / stats-less leaves): full restore
             if applied is None:
                 return  # already in default mode — never touch user conf
             want = dict(_tune_state["baseline"])

@@ -44,7 +44,7 @@ def _shingle_sql(n: int) -> str:
 
 
 def _sw_score_sql(lang: str) -> str:
-    """text.lang_scores_expr component for one language."""
+    """Stopword-hit ratio of one language (text.add_text_stats' lang scores)."""
     words = ", ".join(f"'{w}'" for w in text.STOPWORDS[lang])
     return (
         f"len(list_filter(toks, t -> list_contains([{words}], t)))"

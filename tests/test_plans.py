@@ -206,6 +206,31 @@ def test_exec_mode_retunes_at_every_consumption_boundary(spark):
         li.to_spark()
 
 
+def test_stats_less_leaf_counts_as_unknown_size(spark):
+    """A ``LogicalRDD`` leaf has no statistics, so Spark estimates it at
+    ``spark.sql.defaultSizeInBytes`` (Long.MaxValue). The tuner reads
+    that as unknown size and restores the defaults. Summing it would
+    put a two-row plan in large mode with AQE's initial partition
+    count at the 1024 cap, which then also governed the jobs of the
+    next query built before any re-tune."""
+    import pandas_spark.session as S
+
+    li = ps.read_parquet(spark, f"{SF_DIR}/lineitem.parquet")
+    li.to_spark()  # enter small mode
+    assert S._tune_state["applied"] is not None
+    rdd = spark.createDataFrame(spark.sparkContext.parallelize([(1,), (2,)]), "a long")
+    try:
+        S.tune_for_plan(rdd)
+        baseline = S._tune_state["baseline"]
+        assert baseline[S._INIT_PARTS_KEY] is None
+        assert S._conf_get(spark, S._INIT_PARTS_KEY) is None
+        assert S._tune_state["applied"] is None  # full restore
+        assert (spark.conf.get("spark.sql.adaptive.enabled")
+                == baseline["spark.sql.adaptive.enabled"])
+    finally:
+        li.to_spark()
+
+
 def test_exec_mode_respects_user_conf_overrides(spark):
     """Leaving small mode restores the user's CURRENT conf intent:
     a key the user changed while small mode was live keeps the user's

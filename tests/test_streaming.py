@@ -1057,3 +1057,126 @@ def test_merge_asof_stream_buffered_keeps_big_integral_columns_exact(spark, tmp_
     ], payload="Int64")
     _, got = _run_asof_on_checkpoint(spark, tmp_path, lateness="50 seconds")
     assert got == {_BIG + 3: _BIG + 1, _BIG + 5: _BIG + 7}
+
+
+# ---------------------------------------------------------------------------
+# checkpoint writes: the session default is Spark's FileSystem-based
+# checkpoint manager (session._DEFAULTS, SCALE.md "Checkpoint writes")
+# ---------------------------------------------------------------------------
+
+_CKPT = "org.apache.spark.sql.execution.streaming.checkpointing."
+_CKPT_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_FILE_CONTEXT_MANAGER = _CKPT + "FileContextBasedCheckpointFileManager"
+
+# one stateful stream per checkpoint manager, each under its own root:
+# first the FileContext manager (the control, set as a session conf),
+# then the session default
+_FORK_SCRIPT = """
+import sys
+from pandas_spark import get_spark, streaming as pss
+src, root, file_context = sys.argv[1:4]
+spark = get_spark("checkpoint_forks")
+key = "spark.sql.streaming.checkpointFileManagerClass"
+default = spark.conf.get(key, None)
+for name, manager in (("fc", file_context), ("default", default)):
+    if manager is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, manager)
+    out = pss.dedup_stream(pss.read_stream_parquet(spark, src), ["k"],
+                           on="ts", watermark="10 days")
+    q = (out.writeStream.format("parquet")
+         .option("path", f"{root}/{name}/out")
+         .option("checkpointLocation", f"{root}/{name}/ckpt")
+         .trigger(availableNow=True).start())
+    q.awaitTermination(300)
+    print("BATCHES", name, sum(p["numInputRows"] > 0 for p in q.recentProgress))
+    print("ROWS", name, spark.read.parquet(f"{root}/{name}/out").count())
+"""
+
+
+def test_checkpoint_writes_fork_no_readlink(tmp_path):
+    """A stateful stream on a ``file:`` checkpoint starts no ``readlink``
+    process. FileContext's RawLocalFs forks one per path it resolves
+    (FileUtil.readLink), ~100 per micro-batch; the control stream shows
+    that a logging ``readlink`` first on PATH sees those forks."""
+    import shutil
+    import subprocess
+
+    import pandas as pd
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(3):
+        pd.DataFrame({
+            "k": [i * 10 + j for j in range(5)] + [0],
+            "ts": pd.to_datetime([_ASOF_BASE_S + i * 60] * 6, unit="s"),
+        }).to_parquet(src / f"b{i}.parquet", index=False)
+    shim, log = tmp_path / "shim", tmp_path / "readlink.log"
+    shim.mkdir()
+    (shim / "readlink").write_text(
+        f'#!/bin/sh\necho "$*" >> {log}\nexec {shutil.which("readlink")} "$@"\n'
+    )
+    (shim / "readlink").chmod(0o755)
+    root = tmp_path / "runs"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if not k.startswith("SPARK_GRAFT_")}
+    env.update(PATH=f"{shim}{os.pathsep}{env['PATH']}", PYTHONPATH=repo,
+               SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _FORK_SCRIPT, str(src), str(root), _FILE_CONTEXT_MANAGER],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = {tuple(line.split()[:2]): int(line.split()[2])
+           for line in proc.stdout.splitlines() if line.startswith(("BATCHES", "ROWS"))}
+    forks = log.read_text().splitlines() if log.exists() else []
+    for name in ("fc", "default"):
+        assert out["BATCHES", name] == 3
+        assert out["ROWS", name] == 15  # key 0 repeats in every file
+    assert [f for f in forks if f"{root}/fc/" in f]  # the shim sees the control's forks
+    assert [f for f in forks if f"{root}/default/" in f] == []
+
+
+def test_checkpoint_manager_refuses_to_overwrite(spark, tmp_path):
+    """The session's checkpoint manager is the FileSystem-based one, and
+    a no-overwrite atomic create onto an existing file fails at close
+    and leaves the first file's bytes in place: the guarantee the
+    offset and commit logs rely on to detect a concurrent writer."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "ckpt"))
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(path, conf)
+    assert manager.getClass().getName() == _CKPT + "FileSystemBasedCheckpointFileManager"
+    target = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "ckpt" / "0"))
+    first = manager.createAtomic(target, False)
+    first.write(bytearray(b"first"))
+    first.close()
+    second = manager.createAtomic(target, False)
+    second.write(bytearray(b"second"))
+    with pytest.raises(Py4JJavaError, match="FileAlreadyExists|already exists"):
+        second.close()
+    assert (tmp_path / "ckpt" / "0").read_bytes() == b"first"
+
+
+def test_filecontext_checkpoint_resumes_under_default_manager(spark, tmp_path):
+    """A checkpoint written by the FileContext manager (Spark's own
+    default) resumes under the session default: same files, same
+    layout, and the resumed output equals the batch twin."""
+    previous = spark.conf.get(_CKPT_KEY, None)
+    _write_asof_batches(tmp_path / "src", _PARTITION_BATCHES[:1])
+    try:
+        spark.conf.set(_CKPT_KEY, _FILE_CONTEXT_MANAGER)
+        _, got1 = _run_asof_on_checkpoint(spark, tmp_path)
+    finally:
+        if previous is None:
+            spark.conf.unset(_CKPT_KEY)
+        else:
+            spark.conf.set(_CKPT_KEY, previous)
+    assert got1 == _asof_batch_twin(spark, _PARTITION_BATCHES[:1])
+    _write_asof_batches(tmp_path / "src", _PARTITION_BATCHES)  # adds a file
+    _, got2 = _run_asof_on_checkpoint(spark, tmp_path)
+    assert got2 == _asof_batch_twin(spark, _PARTITION_BATCHES)
