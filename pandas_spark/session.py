@@ -53,20 +53,17 @@ _DEFAULTS = {
     "spark.sql.ansi.enabled": "false",
     "spark.ui.enabled": "false",
     # Stream checkpoints (offset and commit logs, file-source log, state
-    # deltas) through Hadoop FileSystem, not FileContext. On `file:`
-    # FileContext's RawLocalFs resolves every path with
-    # FileUtil.readLink, which forks a `readlink` process from the
-    # driver JVM: ~105 forks per stream_replay micro-batch, most of the
-    # per-partition state-commit floor. Measured on 4 cores: summed
-    # state commit per batch ~320 -> 19-99 ms, stream_replay
-    # pandas_ratio -27%. Both managers refuse a no-overwrite rename onto
-    # an existing file; on `file:` an overwrite is one atomic rename(2)
-    # here against delete-then-rename in FileContext. On HDFS,
-    # FileSystem.rename never overwrites, so a retried batch's delta
-    # rewrite keeps the old file: pass this key as
-    # "org.apache.spark.sql.execution.streaming.checkpointing."
-    # "FileContextBasedCheckpointFileManager" via get_spark(**extra)
-    # there (SCALE.md, "Checkpoint writes").
+    # deltas) go through Hadoop FileSystem, not FileContext. On `file:`,
+    # FileContext's RawLocalFs resolves each path with FileUtil.readLink,
+    # which forks a `readlink` process from the driver JVM: ~100 per
+    # stream_replay micro-batch. Measured on 4 cores (11 ABBA pairs):
+    # stream_replay pandas_ratio 120 -> 93; in traced passes the summed
+    # state commit fell 3.7 -> 0.3 s. Both managers refuse a
+    # no-overwrite rename onto an existing file; an overwrite is one
+    # atomic rename(2) here, delete-then-rename under FileContext.
+    # HDFS's rename never overwrites, so there a retried batch's delta
+    # rewrite would keep the old file: restore FileContext through
+    # get_spark(**extra) (SCALE.md, "Checkpoint writes").
     "spark.sql.streaming.checkpointFileManagerClass": (
         "org.apache.spark.sql.execution.streaming.checkpointing."
         "FileSystemBasedCheckpointFileManager"
