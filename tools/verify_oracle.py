@@ -14,14 +14,14 @@ in BOTH states; the ANSI pass is part of the local gate.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
-
-import os
+# the engine of the checkout this tool sits in, wherever it is cloned
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Scrub bench-session knobs so a lingering big-decade export (e.g.
 # SPARK_GRAFT_DRIVER_MEM=48g) can never mask a default-config failure;
